@@ -85,29 +85,27 @@ def fan_out(df: DataFrame, keys: list[str] | None = None) -> DataFrame:
     return df.repartition(target, *keys) if keys else df.repartition(target)
 
 
-# Upper bound (bytes, Catalyst size estimate) above which fan_out_barrier
-# degrades to a plain repartition instead of checkpointing: localCheckpoint
-# blocks are the ONLY copy of the data and cannot be evicted, so
-# checkpointing a mid-size table (wider than one split but narrower than
-# the core count — e.g. documents arrives in ~15 splits at sf10) would
-# pin the whole table in block storage (the GC-lock pressure
-# operators/ckpt.py documents; r15 ADVICE medium). Above the gate the
-# exchange still fans the heavy map out — Catalyst may push cheap
-# projections below it onto the scan's own splits, which at that width is
-# already parallel enough to not matter. Env-tunable for deployments.
-BARRIER_MAX_BYTES = int(
-    os.environ.get("SPARK_GRAFT_BARRIER_MAX_BYTES", str(2 * 1024**3))
-)
+# Upper bound (bytes, Catalyst size estimate) for pinning a frame with
+# an eager checkpoint: localCheckpoint blocks are the ONLY copy of the
+# data and cannot be evicted, so checkpointing a mid-size table (wider
+# than one split but narrower than the core count — e.g. documents
+# arrives in ~15 splits at sf10) would pin the whole table in block
+# storage (the GC-lock pressure operators/ckpt.py documents; r15 ADVICE
+# medium).
+_CHECKPOINT_MAX_BYTES = 2 * 1024**3
 
 
-def _plan_size_bytes(df: DataFrame) -> int | None:
-    """Catalyst's size estimate for df (bytes), None when unavailable.
-    For a column-pruned parquet scan this is file size scaled by the
-    pruned-column ratio — exactly the bytes a checkpoint would pin."""
+def fits_checkpoint_gate(df: DataFrame) -> bool:
+    """True when Catalyst's size estimate for df is under the checkpoint
+    gate above; False also when no estimate is available (never pin bytes
+    nobody sized). For a column-pruned parquet scan the estimate is file
+    size scaled by the pruned-column ratio — exactly the bytes a
+    checkpoint would pin."""
     try:
-        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     except Exception:
-        return None
+        return False
+    return size <= _CHECKPOINT_MAX_BYTES
 
 
 def fan_out_barrier(df: DataFrame) -> DataFrame:
@@ -126,9 +124,11 @@ def fan_out_barrier(df: DataFrame) -> DataFrame:
 
     No-op on an already-wide input — a real corpus scan never pays the
     checkpoint — and degrades to a checkpoint-free repartition when the
-    input's size estimate exceeds BARRIER_MAX_BYTES (non-evictable block
-    pressure, see the constant above). Callers should SELECT the columns
-    the downstream map consumes before the barrier (plain attribute
+    input is over the checkpoint size gate (fits_checkpoint_gate). Above
+    the gate the exchange still fans the heavy map out — Catalyst may push
+    cheap projections below it onto the scan's own splits, which at that
+    width is already parallel enough to not matter. Callers should SELECT
+    the columns the downstream map consumes before the barrier (plain attribute
     projections push below the repartition into the scan, so pruning is
     preserved and the checkpoint pins only needed bytes — r15 VERDICT
     task #3); only expensive derived expressions must stay above. Use
@@ -139,8 +139,7 @@ def fan_out_barrier(df: DataFrame) -> DataFrame:
     target = sc.defaultParallelism
     if _scan_partitions(df) >= target:
         return df
-    size = _plan_size_bytes(df)
-    if size is not None and size > BARRIER_MAX_BYTES:
+    if not fits_checkpoint_gate(df):
         return df.repartition(target)
     from cellbase_spark.operators.ckpt import eager_checkpoint
 

@@ -1,4 +1,5 @@
-"""Eager localCheckpoint with deterministic block release.
+"""Eager localCheckpoint with deterministic block release, and the
+registry-build scope that engine statistics caches key on.
 
 Why this exists: ``df.localCheckpoint(eager=True)`` truncates lineage and
 caches the partitions — but the cached blocks are the ONLY copy, so Spark
@@ -13,119 +14,89 @@ GCLocker thrash (BASELINE.md round-5 notes).
 ``eager_checkpoint`` keeps the exact localCheckpoint semantics (same
 plans, same lineage truncation — the plan-pin suite is unaffected) but
 records the underlying JVM RDD handle; ``release_prior`` frees every
-recorded handle from PREVIOUS query builds. The registry calls
-``release_prior`` at the start of each query build: by then the previous
-query's result has been consumed (the driver, bench, and the oracle gate
-are all strictly sequential), so its checkpoint blocks are dead weight.
+recorded handle from the thread's PREVIOUS query build. The registry
+calls ``release_prior`` at the start of each query build: by then the
+previous query's result has been consumed (the driver, bench, and the
+oracle gate are all strictly sequential), so its checkpoint blocks are
+dead weight.
 
-Scoping contract (round-6 fix): handles are recorded ONLY for builds that
-enter through the registry wrapper (``registry_build`` context manager,
-entered by ``registry.wrapped``). Checkpoints created by the public
-CellTable API (e.g. ``dedup_clusters`` -> connected_components) are NOT
-recorded, so a later registered-query build can never free blocks backing
-a still-unconsumed API-returned DataFrame. API-created checkpoint blocks
-follow stock localCheckpoint lifetime (live until session stop), which is
-the behavior an interactive user of localCheckpoint already expects.
+Build scope: ``registry.wrapped`` runs every query build inside
+``registry_build(key, sf_dir)``, which gives the build an identity — its
+query key, its ``sf_dir`` and the number of strategy probes it has run
+so far (``current_build()``). ``operators/dedup._cached_probe`` keys its
+vocab-size cache on that identity plus the file signature of the tables
+in ``sf_dir``: a rebuild of the same key over the same files reuses its
+probe results, a changed file always misses, each key's cold build pays
+its own probes, and code outside a registry build (the CellTable API)
+probes on every call.
+
+Scoping contract: handles are recorded ONLY inside a registry build, in
+a list private to the building thread, so a thread's ``release_prior``
+frees only its own previous build's blocks. Checkpoints created by the
+public CellTable API (e.g. ``dedup_clusters`` -> connected_components)
+are NOT recorded, so a later registered-query build can never free
+blocks backing a still-unconsumed API-returned DataFrame. API-created
+checkpoint blocks follow stock localCheckpoint lifetime (live until
+session stop), which is the behavior an interactive user of
+localCheckpoint already expects.
 
 Caveat (documented contract, registry surface only): a caller that builds
-registered query A, then builds registered query B, and only then collects
-A would recompute-fail on A's truncated lineage. No engine surface does
-this — results are collected before the next build everywhere (driver
-contract, bench.py, check_oracle, driver_sim, tests).
+registered query A, then builds registered query B on the SAME thread,
+and only then collects A would recompute-fail on A's truncated lineage.
+No engine surface does this — results are collected before the next
+build everywhere (driver contract, bench.py, check_oracle, driver_sim,
+tests).
 """
 
 from __future__ import annotations
 
+import threading
 from contextlib import contextmanager
-from contextvars import ContextVar
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 
-# JVM RDD handles of checkpoints created by registry-wrapped query builds.
-# release_prior() runs at the START of the next wrapped build, so the list
-# only ever holds handles from already-consumed builds when it is drained.
-# NOTE (single-threaded assumption): the record/drain cycle assumes query
-# builds are strictly sequential (driver contract, bench, check_oracle).
-# The in-build FLAG below is context-local (r6 ADVICE), so an API-surface
-# eager_checkpoint on a concurrent thread is never recorded — but two
-# registry builds racing on different threads would still drain each
-# other's handles; don't do that.
-_LIVE: list = []
 
-# (application id, rdd id) -> stable key of the plan the checkpoint
-# replaced. Lets a statistics cache recognise "the same logical input,
-# checkpointed again on a later build" without trusting the checkpoint
-# RDD's identity. The application-id half of the key is load-bearing
-# (r15 ADVICE medium): RDD ids restart from 0 when a SparkContext is
-# replaced, so a bare rdd-id key could resolve a NEW context's
-# checkpoint to the OLD source's stable key and return a stale vocab
-# size — which mis-sizes the Jaccard bitmap, a correctness failure, not
-# a strategy one. With the app id in the key, entries from a dead
-# context can never match; they age out via the size-capped clear().
-RDD_SOURCE_HASH: dict[tuple[str, int], object] = {}
-_RDD_SOURCE_HASH_MAX = 1024
+@dataclass
+class RegistryBuild:
+    """Identity of one registry query build (see module docstring)."""
+
+    key: str
+    sf_dir: str
+    probes: int = 0
 
 
-def _app_id(df: DataFrame) -> str:
-    try:
-        return df.sparkSession.sparkContext.applicationId
-    except Exception:  # pragma: no cover - context already stopped
-        return ""
+class _ThreadState(threading.local):
+    # build: the registry build running on this thread, if any;
+    # live: JVM RDD handles of checkpoints this thread's builds created.
+    build: RegistryBuild | None = None
+
+    def __init__(self) -> None:
+        self.live: list = []
 
 
-def stable_plan_key(df: DataFrame):
-    """A cache key for df's logical plan that is stable across repeated
-    builds of the same query, including plans that sit ON TOP of an eager
-    checkpoint (whose LogicalRDD leaf re-identifies on every build and so
-    poisons a raw semanticHash).
+_state = _ThreadState()
 
-    Shape: (sha1 of normalized analyzed-plan text, per-LogicalRDD source
-    keys). Expression ids are normalized out of the text before hashing
-    (the digest bounds per-entry memory — r15 VERDICT noted multi-KB plan
-    strings piling up in _VOCAB_STATS); every LogicalRDD leaf is resolved
-    through RDD_SOURCE_HASH to the stable key of the plan its checkpoint
-    replaced — recursively, so a pipeline of chained checkpoints still
-    keys on the original scans. An RDD leaf this engine did not
-    checkpoint keeps its raw (application id, per-build rdd id) in the
-    key: an unknown input degrades to cache-miss, never to a collision,
-    because a wrong hit could mis-size a bitmap, not just mis-pick a
-    strategy."""
-    import hashlib
-    import re
 
-    h = getattr(df, "_cb_semantic_hash", None)
-    if h is not None:
-        return h
-    analyzed = df._jdf.queryExecution().analyzed()
-    txt = re.sub(r"#\d+", "#", analyzed.toString())
-    app = _app_id(df)
-    leaves = analyzed.collectLeaves()
-    resolved = []
-    for i in range(leaves.size()):
-        leaf = leaves.apply(i)
-        if leaf.nodeName() == "LogicalRDD":
-            rid = int(leaf.rdd().id())
-            resolved.append(RDD_SOURCE_HASH.get((app, rid), ("rdd", app, rid)))
-    return (hashlib.sha1(txt.encode()).hexdigest(), tuple(resolved))
+def current_build() -> RegistryBuild | None:
+    """The registry build running on this thread, or None."""
+    return _state.build
 
-# True only while a registry-wrapped query build is executing in THIS
-# thread/context; set via registry_build(). eager_checkpoint records
-# handles only in that scope. ContextVar (not a module global) so a
-# concurrent API-created checkpoint on another thread is not captured
-# and later freed by an unrelated registry build.
-_IN_REGISTRY_BUILD: ContextVar[bool] = ContextVar(
-    "cellbase_ckpt_in_registry_build", default=False
-)
+
+def live_handles() -> list:
+    """This thread's recorded checkpoint handles (the previous or current
+    build's); read by the handle-leak guards."""
+    return _state.live
 
 
 @contextmanager
-def registry_build():
+def registry_build(key: str, sf_dir: str):
     """Mark the dynamic extent of a registry-wrapped query build."""
-    token = _IN_REGISTRY_BUILD.set(True)
+    prior, _state.build = _state.build, RegistryBuild(key, sf_dir)
     try:
         yield
     finally:
-        _IN_REGISTRY_BUILD.reset(token)
+        _state.build = prior
 
 
 def eager_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
@@ -134,51 +105,28 @@ def eager_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     see module docstring).
 
     ``eager=False`` defers materialization to the caller's FIRST action
-    on the returned frame — lineage truncation, block recording and the
-    stable-key registration are identical, but the materialization job
-    and that first action collapse into one (used by the iterative CC
-    loop, whose per-round convergence agg is exactly such an action:
-    one job per round instead of checkpoint-job + agg-job — r15 VERDICT
-    task #5). Callers must guarantee an action follows promptly, or the
-    checkpoint stays a plan.
-
-    The checkpointed frame also carries the SOURCE plan's semanticHash
-    (``_cb_semantic_hash``): a checkpoint scans a fresh RDD, so its own
-    semanticHash changes on every build, which silently defeated any
-    plan-keyed statistics cache downstream (the dedup vocab probes re-ran
-    their 2-3 driver actions on every execution — optimization r15).
-    Chained checkpoints propagate the original hash."""
-    try:
-        src_key = stable_plan_key(df)
-    except Exception:  # analysis failure: leave the cache key unstable
-        src_key = None
+    on the returned frame — lineage truncation and block recording are
+    identical, but the materialization job and that first action
+    collapse into one (used by the iterative CC loop, whose per-round
+    convergence agg is exactly such an action: one job per round instead
+    of checkpoint-job + agg-job — r15 VERDICT task #5). Callers must
+    guarantee an action follows promptly, or the checkpoint stays a
+    plan."""
     out = df.localCheckpoint(eager=eager)
-    if src_key is not None:
-        out._cb_semantic_hash = src_key
-        try:
-            # Register rdd-id -> source key so plans DERIVED from this
-            # checkpoint (which only see an anonymous LogicalRDD leaf) can
-            # still build a build-stable statistics-cache key — see
-            # operators/dedup._cached_probe.
-            if len(RDD_SOURCE_HASH) >= _RDD_SOURCE_HASH_MAX:
-                RDD_SOURCE_HASH.clear()
-            rid = out._jdf.queryExecution().analyzed().rdd().id()
-            RDD_SOURCE_HASH[(_app_id(out), int(rid))] = src_key
-        except Exception:  # pragma: no cover - py4j accessor drift
-            pass
-    if _IN_REGISTRY_BUILD.get():
+    if _state.build is not None:
         try:  # best-effort: failing to record must never fail the query
-            _LIVE.append(out._jdf.queryExecution().analyzed().rdd())
+            _state.live.append(out._jdf.queryExecution().analyzed().rdd())
         except Exception:  # pragma: no cover - py4j accessor drift
             pass
     return out
 
 
 def release_prior() -> int:
-    """Free all recorded checkpoint blocks; returns how many were freed."""
+    """Free this thread's recorded checkpoint blocks; returns how many
+    were freed."""
     n = 0
-    while _LIVE:
-        rdd = _LIVE.pop()
+    while _state.live:
+        rdd = _state.live.pop()
         try:
             rdd.unpersist(False)
             n += 1

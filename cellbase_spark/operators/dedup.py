@@ -19,8 +19,11 @@ Scale design:
 
 from __future__ import annotations
 
+import os
+
+from cellbase_spark.io import source_signature
+from cellbase_spark.operators.ckpt import current_build
 from cellbase_spark.operators.ckpt import eager_checkpoint as _ckpt
-from cellbase_spark.operators.ckpt import stable_plan_key
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -122,34 +125,47 @@ def _exact_distinct(tok_df: DataFrame, col: str) -> int:
     return tok_df.agg(F.count_distinct(col).alias("_n")).first()["_n"]
 
 
-# Vocab-size probe results, keyed by the probed plan's semantic hash +
-# the limits that shaped the verdict. This is an engine statistics cache
-# (the ANALYZE-cache pattern): the probes exist only to pick a physical
-# strategy (bitmap vs broadcast vs shuffle), so a stale entry after the
-# underlying files changed mid-process can only cost plan optimality,
-# never correctness — the same staleness contract as Spark's own
-# file-index and CBO stats. Round-4 rationale: the r3 tiered probe
-# (sample-HLL -> full-HLL -> exact) is the right 100 TB shape but costs
-# 2-3 driver actions per call, which at toy scale was the entire
-# q_dedup_near regression (~+0.45 s); caching makes every re-execution
-# of the same logical input free.
+# Vocab-size probe results of registry builds. The probes exist to pick
+# a physical strategy (bitmap vs broadcast vs shuffle), but the bitmap
+# path also SIZES its words from the cached count, so a wrong hit is a
+# correctness failure, not a slow plan. The cache is therefore scoped to
+# registry builds (ckpt.current_build) and keyed on data identity: the
+# query key, io.source_signature over the tables in the build's sf_dir
+# (file names, sizes, mtimes — a changed file always misses), the probe's
+# ordinal within the build, and the probe's kind and limits. A rebuild of
+# the same key over the same files pays its 2-3 probe actions once, not
+# per execution (the r3 tiered probe's per-call actions were the whole
+# q_dedup_near bench regression); each key's cold build pays its own
+# probes; calls outside a registry build (the CellTable API) probe every
+# time.
 _VOCAB_STATS: dict[tuple, int | None] = {}
 _VOCAB_STATS_MAX = 256
 
 
-def _cached_probe(df: DataFrame, extra_key: tuple, compute):
-    try:
-        # Build-stable plan key (ckpt.stable_plan_key): survives the
-        # per-build re-identification of checkpoint RDD leaves that made
-        # a raw semanticHash key miss on every execution.
-        key = (stable_plan_key(df),) + extra_key
-    except Exception:  # analysis failure: just run the probe uncached
+def _cached_probe(kind: tuple, compute):
+    build = current_build()
+    if build is None:
         return compute()
-    if key not in _VOCAB_STATS:
-        if len(_VOCAB_STATS) >= _VOCAB_STATS_MAX:
-            _VOCAB_STATS.clear()
-        _VOCAB_STATS[key] = compute()
-    return _VOCAB_STATS[key]
+    build.probes += 1
+    try:
+        tables = [
+            f[: -len(".parquet")]
+            for f in os.listdir(build.sf_dir)
+            if f.endswith(".parquet")
+        ]
+        sig = source_signature(build.sf_dir, *tables)
+    except OSError:  # sf_dir is not a table directory: no data identity
+        return compute()
+    key = (build.key, sig, build.probes) + kind
+    try:  # one lookup, not check-then-get: another thread may clear()
+        return _VOCAB_STATS[key]
+    except KeyError:
+        pass
+    value = compute()
+    if len(_VOCAB_STATS) >= _VOCAB_STATS_MAX:
+        _VOCAB_STATS.clear()
+    _VOCAB_STATS[key] = value
+    return value
 
 
 def _bounded_vocab_size(
@@ -187,7 +203,7 @@ def _bounded_vocab_size(
         n = _exact_distinct(tok_df, col)
         return n if n <= limit else None
 
-    return _cached_probe(tok_df, ("bounded", col, limit), compute)
+    return _cached_probe(("bounded", col, limit), compute)
 
 
 def jaccard_pairs(
@@ -278,11 +294,11 @@ def jaccard_pairs(
             return _exact_distinct(toks, "_tok")
         return full_est
 
-    # Probe result cached per (token-stream plan, limits) — see
-    # _VOCAB_STATS: re-running the same dedup query in one process pays
-    # the 2-3 probe actions once, not per execution.
+    # Probe result cached per registry build identity — see _VOCAB_STATS:
+    # re-building the same dedup query over the same files pays the 2-3
+    # probe actions once, not per execution.
     vocab_size = _cached_probe(
-        toks, ("jaccard", bitmap_vocab_limit, vocab_broadcast_limit), _probe_vocab
+        ("jaccard", bitmap_vocab_limit, vocab_broadcast_limit), _probe_vocab
     )
     use_bitmap = vocab_size is not None and vocab_size <= bitmap_vocab_limit
 
@@ -582,29 +598,31 @@ def connected_components(
     # iterative min-label/path-halving loop below runs unchanged; the
     # two paths are result-identical (same min-id canonical labels) and
     # the iterative path stays covered by tests at limit=0.
-    # The probe decides the path AND delivers the driver-path edges,
-    # sized from FREE driver-side metadata (r16): the edges are already
+    # The probe decides the path AND delivers the driver-path edges, and
+    # no branch ships more than driver_cc_limit + 1 rows to the driver:
+    # cached bytes cannot bound a row count (a two-long row takes ~84 B
+    # in memory, less in serialized disk blocks). It is sized from FREE
+    # driver-side metadata (r16): the edges are already
     # eager-checkpointed, so the block manager knows their cached bytes
     # (getRDDStorageInfo) without running a job.
-    #  - small cached bytes: plain collect() — one full-scan job over
-    #    the cached blocks, no CollectLimit take-ladder (the r15
-    #    limit(cap+1).collect() ran a 1/4/11-task incremental ladder;
-    #    measured ~2x slower than the straight collect at bench scale);
+    #  - small cached bytes: limit(cap+1).collect() over the cached
+    #    blocks coalesced to ONE partition — one job, one task, no
+    #    CollectLimit take-ladder (the r15 limit+collect over the raw
+    #    partitions ran a 1/4/11-task incremental ladder, measured ~2x
+    #    slower than a straight collect at bench scale);
     #  - large cached bytes: a count() job decides FIRST, so the
     #    over-cap path never ships millions of rows to the driver only
     #    to discard them (r15 ADVICE low);
     #  - metadata unavailable (never-materialized or foreign RDD): the
-    #    r15 bounded limit+collect, unchanged.
+    #    r15 bounded limit+collect over the raw partitions.
     nbytes = _cached_rdd_bytes(e)
     probe_gate = min(128 * 1024 * 1024, max(driver_cc_limit, 1) * 64)
-    if nbytes is not None and nbytes <= probe_gate:
-        _probe = e.collect()
-        n_edges = len(_probe)
-    elif nbytes is not None:
+    if nbytes is not None and nbytes > probe_gate:
         n_edges = e.count()
         _probe = e.collect() if n_edges <= driver_cc_limit else []
     else:
-        _probe = e.limit(driver_cc_limit + 1).collect()
+        src = e if nbytes is None else e.coalesce(1)
+        _probe = src.limit(driver_cc_limit + 1).collect()
         n_edges = len(_probe)
     if n_edges <= driver_cc_limit:
         parent: dict = {}

@@ -95,7 +95,7 @@ def salted_join(
     the left's key histogram is pathological. Result is identical to a
     plain join (salts are disjoint shards of each key's rows).
 
-    Measured A/B (r15, scripts/ab_skew_join.py: sf100 orders 150M rows
+    Measured A/B (r15, sf100 orders 150M rows
     with 30% hammered onto ONE key — a ~700 MB hot partition, past
     AQE's default 256 MB split threshold; broadcast disabled; best-of-3
     interleaved): plain+skewJoin-off 15.3 s, plain+skewJoin-ON 14.3 s,

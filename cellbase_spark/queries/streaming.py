@@ -1018,14 +1018,13 @@ def _run_ann_stream(
     # every run re-reads the parquet index; nothing persists across
     # runs. Above the gate (a real 100 TB index) the checkpoint is
     # skipped and each batch keeps the partition-pruned catalog scan.
-    from cellbase_spark.io import BARRIER_MAX_BYTES, _plan_size_bytes
+    from cellbase_spark.io import fits_checkpoint_gate
     from cellbase_spark.operators.ckpt import eager_checkpoint
 
     base = spark.table(index_table).select(
         "vec_id", "centroid_id", "embedding", "nrm"
     )
-    size = _plan_size_bytes(base)
-    if size is not None and size <= BARRIER_MAX_BYTES:
+    if fits_checkpoint_gate(base):
         # coalesce the ~630 one-file leaf splits into core-count
         # partitions BEFORE checkpointing (narrow, no shuffle): a
         # LogicalRDD keeps its partition count forever — checkpointing

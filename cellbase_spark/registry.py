@@ -45,14 +45,16 @@ def register(name: str, oracle: str | None, family: str, doc: str = ""):
             raise ValueError(f"duplicate query key: {name}")
 
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-            # free the PREVIOUS query build's eager-checkpoint blocks
-            # (non-evictable otherwise; see operators/ckpt.py) — all
-            # engine surfaces consume a query's result before building
-            # the next one, so those blocks are dead weight by now
+            # free this thread's PREVIOUS query build's eager-checkpoint
+            # blocks (non-evictable otherwise; see operators/ckpt.py) —
+            # all engine surfaces consume a query's result before
+            # building the next one, so those blocks are dead weight by
+            # now. The build scope names (key, sf_dir) for the probe
+            # caches that key on it.
             from cellbase_spark.operators.ckpt import registry_build, release_prior
 
             release_prior()
-            with registry_build():
+            with registry_build(name, sf_dir):
                 return fn(spark, sf_dir)
 
         wrapped.__name__ = fn.__name__

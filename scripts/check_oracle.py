@@ -167,18 +167,19 @@ def main() -> int:
             print(f"ok   {key}: {len(sdf)} rows [{time.time()-t0:.1f}s]")
             n_pass += 1
         # Checkpoint-handle leak guard (r9 verdict nit): release_prior()
-        # drains _LIVE at the start of every wrapped build, so after any
-        # single key's build+collect the list holds at most THAT build's
-        # handles. A key that checkpoints per iteration stays small
-        # (pagerank/CC: a handful); a bound of 64 catches a drain
-        # regression at the first leaking key instead of an OOM at key
-        # 200 of the battery.
+        # drains this thread's handle list at the start of every wrapped
+        # build, so after any single key's build+collect the list holds
+        # at most THAT build's handles. A key that checkpoints per
+        # iteration stays small (pagerank/CC: a handful); a bound of 64
+        # catches a drain regression at the first leaking key instead of
+        # an OOM at key 200 of the battery.
         from cellbase_spark.operators import ckpt
 
-        if len(ckpt._LIVE) > 64:  # if/raise, not assert: survives -O
+        n_live = len(ckpt.live_handles())
+        if n_live > 64:  # if/raise, not assert: survives -O
             raise RuntimeError(
                 f"eager-checkpoint handle leak after {key}: "
-                f"{len(ckpt._LIVE)} recorded handles (release_prior "
+                f"{n_live} recorded handles (release_prior "
                 "drain regression — see operators/ckpt.py)"
             )
     print(f"\n{n_pass} ok, {n_fail} FAIL, {n_rowsonly} rows-only")

@@ -349,7 +349,7 @@ def test_api_checkpoint_survives_registry_build(spark, sf_dir):
     docs = cb.table("documents")
     clusters = docs.dedup_clusters("text")  # API path may checkpoint
     # API-created checkpoints must NOT be in the registry release list
-    assert not ckpt._LIVE, "API build recorded handles into _LIVE"
+    assert not ckpt.live_handles(), "API build recorded checkpoint handles"
     # run a registered query that itself checkpoints, end-to-end
     REGISTRY["q_sql_recursive"].fn(spark, sf_dir).collect()
     # the API frame is still consumable — its blocks were never freed
@@ -715,7 +715,7 @@ def test_registry_checkpoint_handles_stay_bounded(spark, sf_dir):
     """Round-10 (r9 verdict nit): release_prior() must BOUND the
     recorded eager-checkpoint handle list across sequential registry
     builds — the drain runs at the start of every wrapped build, so
-    after N checkpoint-using queries _LIVE holds at most the LAST
+    after N checkpoint-using queries the list holds at most the LAST
     build's handles, never the union (the unreleased union is what
     GC-locked the JVM in round 5). scripts/check_oracle.py asserts the
     same bound after every key of the full battery."""
@@ -726,7 +726,7 @@ def test_registry_checkpoint_handles_stay_bounded(spark, sf_dir):
     sizes = []
     for key in ("q_pagerank", "q_cc_iterative", "q_pagerank", "q_dedup_clusters"):
         qs[key](spark, sf_dir).collect()
-        sizes.append(len(ckpt._LIVE))
+        sizes.append(len(ckpt.live_handles()))
     # bounded: each build's record is a handful of handles, and it never
     # accumulates across builds (sizes would be monotonically growing)
     assert all(s <= 64 for s in sizes), sizes
@@ -736,7 +736,7 @@ def test_registry_checkpoint_handles_stay_bounded(spark, sf_dir):
     )
     # an explicit drain empties the record entirely
     ckpt.release_prior()
-    assert not ckpt._LIVE
+    assert not ckpt.live_handles()
 
 
 def test_facade_ann_compaction_lifecycle(spark, sf_dir, tmp_path):

@@ -209,6 +209,44 @@ def test_connected_components_string_ids_fast_path(spark):
     }
 
 
+def test_connected_components_driver_probe_ships_at_most_limit_plus_one(
+    spark, monkeypatch
+):
+    """The path probe never ships more than driver_cc_limit + 1 edge rows
+    to the driver, even when the cached bytes pass the 64 B/row gate: a
+    two-long edge row takes ~84 B in memory, but blocks stored on disk
+    are serialized and smaller. The test reports such a size (40 B/row),
+    so the cached-bytes branch sees more rows than the limit."""
+    from cellbase_spark.operators import dedup
+
+    limit, n_pairs = 1000, 1500
+    nodes = spark.range(0, 2 * n_pairs)
+    # pairs (2i, 2i+1): 1500 two-node components, so the iterative path
+    # converges in two rounds
+    edges = spark.range(0, n_pairs).select(
+        (F.col("id") * 2).alias("id_a"), (F.col("id") * 2 + 1).alias("id_b")
+    )
+    shipped = []
+    real_collect = type(edges).collect
+
+    def counting_collect(df):
+        rows = real_collect(df)
+        shipped.append(len(rows))
+        return rows
+
+    monkeypatch.setattr(dedup, "_cached_rdd_bytes", lambda df: 40 * n_pairs)
+    monkeypatch.setattr(type(edges), "collect", counting_collect)
+    out = dedup.connected_components(
+        nodes, edges, id_col="id", driver_cc_limit=limit
+    )
+    monkeypatch.undo()
+    assert max(shipped) <= limit + 1, shipped
+    assert dedup.LAST_CC_STATS["path"] == "iterative"
+    assert all(
+        r["cluster_id"] == r["id"] - r["id"] % 2 for r in out.collect()
+    )
+
+
 def test_canonical_selection_policy_on_handbuilt_groups(spark, tmp_path):
     """q_dedup_canonical's survival policy on hand-built duplicate groups:
     within each near-dup cluster the winner is (n_chars desc, doc_id asc)
