@@ -347,8 +347,10 @@ def measure_streaming(spark, sf_dir: str, runs: int = 2) -> dict:
     source -> watermarked tumbling window agg -> availableNow -> memory
     sink, awaited). One warm-up then best-of-N wall-clock; every run
     executes the full micro-batch planner + state store + sink-commit
-    path, not the batch fast path. Gives the q_stream_run_* family a
-    throughput number beside its correctness rows (VERDICT r3 item 7)."""
+    path, not the batch fast path, on the 8 state stores every engine
+    stream starts with (pipelines.start_stream). Gives the q_stream_run_*
+    family a throughput number beside its correctness rows (VERDICT r3
+    item 7)."""
     import time as _time
 
     from cellbase_spark.queries.streaming import _events_stream_dir
@@ -365,25 +367,11 @@ def measure_streaming(spark, sf_dir: str, runs: int = 2) -> dict:
 
     one_run()  # warm-up (stream-engine class loading, state-store init)
     secs = min(one_run() for _ in range(runs))
-    # Tuned state-partition run: one state-store instance per shuffle
-    # partition pays open+commit per micro-batch, and at bench state size
-    # (~3.6k window keys) 32 instances are pure overhead — measured ~2x
-    # the batch time of 8 (scripts/bench_streaming.py profile; at 100 TB
-    # you size this to state volume, which is the same sizing decision).
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        one_run()
-        secs_tuned = min(one_run() for _ in range(runs))
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return {
         "pipeline": "tumbling_1h_availableNow",
         "events": n_events,
         "sec": round(secs, 4),
         "events_per_sec": round(n_events / secs) if secs > 0 else -1,
-        "sec_tuned_8_state_parts": round(secs_tuned, 4),
-        "events_per_sec_tuned": round(n_events / secs_tuned) if secs_tuned > 0 else -1,
     }
 
 

@@ -9,7 +9,7 @@ re-expressed Spark-first and extended with LLM-data-pipeline operators
 100 TB scale.
 
 Layout:
-    session.py    SparkSession builder (AQE, UTC, Arrow, local-tuned shuffle)
+    session.py    SparkSession builder: one table of engine settings, applied once
     schemas.py    explicit StructTypes for every table (FIXTURES.md)
     io.py         load_table / save helpers (parquet, csv, jsonl)
     registry.py   query registry: name -> (builder fn, oracle SQL)

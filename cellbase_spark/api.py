@@ -739,30 +739,18 @@ class CellTable:
 
     def save(self, path: str, fmt: str = "parquet") -> None:
         """Persist the edited sheet (reference: save back to file).
-        fmt='xlsx' writes one worksheet named after the table — the
-        spreadsheet face of the same data; sheet-sized tables only
-        (workbooks are a driver-side format by nature)."""
-        writer = self.df.write.mode("overwrite")
+        fmt='xlsx' or 'ods' writes one worksheet named after the table
+        (CellBase.export_workbook) — the spreadsheet face of the same
+        data; sheet-sized tables only (workbooks are a driver-side format
+        by nature)."""
         if fmt == "csv":
             from cellbase_spark.io import write_csv_table
 
             write_csv_table(self.df, path)
         elif fmt == "parquet":
-            writer.parquet(path)
+            self.df.write.mode("overwrite").parquet(path)
         elif fmt in ("xlsx", "ods"):
-            if fmt == "ods":
-                from cellbase_spark.sources.ods import (
-                    write_ods_workbook as write_workbook,
-                )
-            else:
-                from cellbase_spark.sources.excel import (
-                    write_xlsx_workbook as write_workbook,
-                )
-
-            _guard_xlsx_export(self.df, self.name)
-            header = self.df.columns
-            body = [[row[c] for c in header] for row in self.df.collect()]
-            write_workbook({self.name: (header, body)}, path)
+            CellBase.export_workbook({self.name: self}, path, fmt)
         else:
             raise ValueError(f"unsupported save format {fmt!r}")
 
@@ -874,8 +862,9 @@ class CellBase:
             for name, df in dfs.items()
         }
 
+    @staticmethod
     def export_workbook(
-        self, tables: dict[str, CellTable], path: str, fmt: str = "xlsx"
+        tables: dict[str, CellTable], path: str, fmt: str = "xlsx"
     ) -> None:
         """The symmetric save-back flow: every CellTable becomes a named
         worksheet of ONE workbook file — close the reference's round trip

@@ -258,16 +258,8 @@ sf_dir, name, key, n_buckets, table, home = (
     sys.argv[1], sys.argv[2], sys.argv[3], int(sys.argv[4]), sys.argv[5],
     sys.argv[6],
 )
-from pyspark.sql import SparkSession
-spark = (
-    SparkSession.builder.master("local[8]")
-    .appName("cellbase-ingest-bucketed")
-    .config("spark.ui.enabled", "false")
-    .config("spark.driver.memory",
-            __import__("os").environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-    .config("spark.sql.shuffle.partitions", "8")
-    .getOrCreate()
-)
+from cellbase_spark.session import get_spark
+spark = get_spark("cellbase-ingest-bucketed", extra_conf={"spark.sql.shuffle.partitions": "8"})
 spark.sparkContext.setLogLevel("ERROR")
 from pyspark.sql import functions as F
 from cellbase_spark.io import load_table

@@ -13,8 +13,10 @@ GCLocker thrash (BASELINE.md round-5 notes).
 
 ``eager_checkpoint`` keeps the exact localCheckpoint semantics (same
 plans, same lineage truncation — the plan-pin suite is unaffected) but
-records the underlying JVM RDD handle; ``release_prior`` frees every
-recorded handle from the thread's PREVIOUS query build. The registry
+records the underlying JVM RDD handle; ``build_persist`` records an
+evictable MEMORY_AND_DISK persist the same way (a frame a key reuses
+within its build, e.g. PageRank's adjacency). ``release_prior`` frees every recorded
+handle from the thread's PREVIOUS query build. The registry
 calls ``release_prior`` at the start of each query build: by then the
 previous query's result has been consumed (the driver, bench, and the
 oracle gate are all strictly sequential), so its checkpoint blocks are
@@ -55,6 +57,7 @@ from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
+from pyspark.storagelevel import StorageLevel
 
 
 @dataclass
@@ -68,7 +71,8 @@ class RegistryBuild:
 
 class _ThreadState(threading.local):
     # build: the registry build running on this thread, if any;
-    # live: JVM RDD handles of checkpoints this thread's builds created.
+    # live: JVM handles (checkpoint RDDs, persisted Datasets) this
+    # thread's builds created.
     build: RegistryBuild | None = None
 
     def __init__(self) -> None:
@@ -121,14 +125,24 @@ def eager_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     return out
 
 
+def build_persist(df: DataFrame) -> DataFrame:
+    """``df.persist(MEMORY_AND_DISK)`` (evictable: lineage is kept, so an
+    evicted block recomputes); inside a registry build the frame is
+    recorded so the thread's next build unpersists it."""
+    out = df.persist(StorageLevel.MEMORY_AND_DISK)
+    if _state.build is not None:
+        _state.live.append(out._jdf)
+    return out
+
+
 def release_prior() -> int:
-    """Free this thread's recorded checkpoint blocks; returns how many
-    were freed."""
+    """Free this thread's recorded checkpoint blocks and persisted frames;
+    returns how many were freed."""
     n = 0
     while _state.live:
-        rdd = _state.live.pop()
+        handle = _state.live.pop()
         try:
-            rdd.unpersist(False)
+            handle.unpersist(False)  # JVM RDD / Dataset: non-blocking
             n += 1
         except Exception:  # pragma: no cover - session already stopped
             pass

@@ -11,14 +11,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from cellbase_spark.io import load_table
+from cellbase_spark.operators.ckpt import build_persist
 from cellbase_spark.registry import register
-
-# previous calls' persisted frames (unpersisted on re-entry — repeated
-# calls must not accumulate caches; see q_pagerank docstring)
-_PREV_TRI = None
 
 _EDGES_SQL = """
 SELECT DISTINCT LEAST(o_custkey, o_orderkey % 1500) AS u,
@@ -57,19 +53,11 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     (orientation kills the 6x duplication AND caps wedge fan-out by
     high-degree nodes' ORDER, not their degree). At 100 TB: partition
     edges by u, broadcast nothing, let AQE handle the wedge skew. The
-    edge frame is persisted MEMORY_AND_DISK (evictable) with the
-    previous call's frame
-    unpersisted (see q_pagerank's note on why eager localCheckpoint
-    accumulates non-evictable blocks across calls)."""
-    global _PREV_TRI
-    if _PREV_TRI is not None:
-        try:
-            _PREV_TRI.unpersist(blocking=False)
-        except Exception:
-            pass
-        _PREV_TRI = None
-    e = _edges(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
-    _PREV_TRI = e
+    edge frame is persisted MEMORY_AND_DISK (evictable) and unpersisted
+    by the thread's next registry build (ckpt.build_persist; see
+    q_pagerank's note on why eager localCheckpoint accumulates
+    non-evictable blocks across calls)."""
+    e = build_persist(_edges(spark, sf_dir))
     e1 = e.select(F.col("u").alias("a"), F.col("v").alias("b"))
     e2 = e.select(F.col("u").alias("b"), F.col("v").alias("c"))
     e3 = e.select(F.col("u").alias("a"), F.col("v").alias("c"))
@@ -105,9 +93,6 @@ def q_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _PR_ITERS = 3
-
-# previous q_pagerank call's persisted adjacency (unpersisted on re-entry)
-_PREV_ADJ = None
 
 # One recursive step rendered as a CTE pair: contributions flow along the
 # symmetric adjacency, are summed EXACTLY in decimal (order-independent),
@@ -153,19 +138,12 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     evicted block just recomputes — where an eager localCheckpoint's
     blocks are the only copy and can never be evicted: at sf10 two
     back-to-back calls accumulated ~2 non-evictable 43M-row caches and
-    GC-locked the JVM). The previous call's frame is explicitly
-    unpersisted, the same stop/replace-prior-run contract the streaming
-    keys use. Each round is one shuffle join rank⋈adj plus a dst-keyed
+    GC-locked the JVM). The thread's next registry build unpersists the
+    frame (ckpt.build_persist), the same release contract as the eager
+    checkpoints. Each round is one shuffle join rank⋈adj plus a dst-keyed
     hash agg. At 100 TB: pre-partition adj and ranks by the SAME key so
     every round's join is exchange-free, checkpoint every ~5 rounds to
     cut lineage, and let AQE coalesce the rank-side shuffle."""
-    global _PREV_ADJ
-    if _PREV_ADJ is not None:
-        try:
-            _PREV_ADJ.unpersist(blocking=False)
-        except Exception:
-            pass
-        _PREV_ADJ = None
     e = _edges(spark, sf_dir)
     adj = (
         e.select(F.col("u").alias("src"), F.col("v").alias("dst"))
@@ -173,8 +151,7 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     deg = adj.groupBy("src").agg(F.count(F.lit(1)).alias("degree"))
     # adjacency annotated with the source degree once, reused every round
-    adj_deg = adj.join(deg, "src").persist(StorageLevel.MEMORY_AND_DISK)
-    _PREV_ADJ = adj_deg
+    adj_deg = build_persist(adj.join(deg, "src"))
     ranks = deg.select(F.col("src").alias("node"), F.lit(1.0).alias("rank"))
     for _ in range(_PR_ITERS):
         # Contributions sum in a LONG accumulator, not a wide decimal

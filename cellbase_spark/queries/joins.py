@@ -570,25 +570,14 @@ def q_tpch_q3_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _FACT_LAYOUT_INGEST_SCRIPT = """
-import os, sys
+import sys
 sf_dir, n_buckets, t_l, t_o, home_l, home_o, scratch = (
     sys.argv[1], int(sys.argv[2]), sys.argv[3], sys.argv[4], sys.argv[5],
     sys.argv[6], sys.argv[7],
 )
-from pyspark.sql import SparkSession
-spark = (
-    SparkSession.builder.master("local[8]")
-    .appName("cellbase-ingest-factlayout")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.shuffle.partitions", str(n_buckets))
-    # the denorm build SORTS fact-sized data: PySpark's 1g default
-    # driver heap (local mode = the only JVM) OOMs past gate scale
-    .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-    .getOrCreate()
-)
+from cellbase_spark.session import get_spark
+spark = get_spark("cellbase-ingest-factlayout")
 spark.sparkContext.setLogLevel("ERROR")
-from cellbase_spark.session import configure_session
-configure_session(spark)
 from cellbase_spark.operators.factlayout import build_staged_fact_layout
 
 build_staged_fact_layout(

@@ -1688,16 +1688,8 @@ def q_dedup_band_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BAND_INGEST_SCRIPT = """
 import sys
 sf_dir, home = sys.argv[1], sys.argv[2]
-from pyspark.sql import SparkSession
-spark = (
-    SparkSession.builder.master("local[8]")
-    .appName("cellbase-ingest-bands")
-    .config("spark.ui.enabled", "false")
-    .config("spark.driver.memory",
-            __import__("os").environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-    .config("spark.sql.shuffle.partitions", "8")
-    .getOrCreate()
-)
+from cellbase_spark.session import get_spark
+spark = get_spark("cellbase-ingest-bands", extra_conf={"spark.sql.shuffle.partitions": "8"})
 spark.sparkContext.setLogLevel("ERROR")
 from pyspark.sql import functions as F
 from cellbase_spark.io import load_table

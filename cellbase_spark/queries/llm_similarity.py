@@ -1085,9 +1085,6 @@ _D2_LEARNED_DUCK = (
 )
 
 
-_PREV_TRAIN = None
-
-
 @register(
     "q_ivf_train",
     family="llm-sim",
@@ -1170,18 +1167,11 @@ def q_ivf_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("b.d").alias("d"),
     )
     # reused 3x (stats, centroid means, iteration-2 reassign): persist
-    # EVICTABLE, previous call's frame released (the graph.py pattern —
-    # eager checkpoints would accumulate non-evictable blocks)
-    global _PREV_TRAIN
-    if _PREV_TRAIN is not None:
-        try:
-            _PREV_TRAIN.unpersist(blocking=False)
-        except Exception:
-            pass
-    from pyspark import StorageLevel
+    # EVICTABLE, released by the thread's next registry build (eager
+    # checkpoints would accumulate non-evictable blocks)
+    from cellbase_spark.operators.ckpt import build_persist
 
-    a1 = a1.persist(StorageLevel.MEMORY_AND_DISK)
-    _PREV_TRAIN = a1
+    a1 = build_persist(a1)
     stats1 = a1.groupBy("centroid_id").agg(
         F.count(F.lit(1)).alias("n"), dsum("d", "inertia", 6)
     )
@@ -2830,16 +2820,8 @@ def q_ann_index_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
 _INGEST_SCRIPT = """
 import sys
 sf_dir, table, home = sys.argv[1], sys.argv[2], sys.argv[3]
-from pyspark.sql import SparkSession
-spark = (
-    SparkSession.builder.master("local[8]")
-    .appName("cellbase-ingest-attach")
-    .config("spark.ui.enabled", "false")
-    .config("spark.driver.memory",
-            __import__("os").environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-    .config("spark.sql.shuffle.partitions", "8")
-    .getOrCreate()
-)
+from cellbase_spark.session import get_spark
+spark = get_spark("cellbase-ingest-attach", extra_conf={"spark.sql.shuffle.partitions": "8"})
 spark.sparkContext.setLogLevel("ERROR")
 from cellbase_spark.io import load_table
 from cellbase_spark.operators.similarity import build_ann_index

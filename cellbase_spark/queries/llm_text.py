@@ -1223,16 +1223,8 @@ def q_bm25_indexed_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BM25_INGEST_SCRIPT = """
 import sys
 sf_dir, table, home = sys.argv[1], sys.argv[2], sys.argv[3]
-from pyspark.sql import SparkSession
-spark = (
-    SparkSession.builder.master("local[8]")
-    .appName("cellbase-ingest-bm25")
-    .config("spark.ui.enabled", "false")
-    .config("spark.driver.memory",
-            __import__("os").environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-    .config("spark.sql.shuffle.partitions", "8")
-    .getOrCreate()
-)
+from cellbase_spark.session import get_spark
+spark = get_spark("cellbase-ingest-bm25", extra_conf={"spark.sql.shuffle.partitions": "8"})
 spark.sparkContext.setLogLevel("ERROR")
 from cellbase_spark.io import load_table
 from cellbase_spark.operators.text import build_bm25_index

@@ -424,24 +424,23 @@ def q_stream_run_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     for q in spark.streams.active:
         if q.name == name:
             q.stop()
-    with pipelines.state_sized_shuffle(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(processingTime="0 seconds")
-            .start()
-        )
-        try:
-            # One file per trigger, awaited: each move is one micro-batch,
-            # so the watermark advanced by batch N filters batch N+1's
-            # input — the semantics under test (see _late_arrival_dir on
-            # why a single availableNow run cannot express this).
-            for f in sorted(os.listdir(pending)):
-                shutil.move(os.path.join(pending, f), os.path.join(watch, f))
-                q.processAllAvailable()
-        finally:
-            q.stop()
+    q = pipelines.start_stream(
+        spark,
+        agg.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .trigger(processingTime="0 seconds"),
+    )
+    try:
+        # One file per trigger, awaited: each move is one micro-batch,
+        # so the watermark advanced by batch N filters batch N+1's
+        # input — the semantics under test (see _late_arrival_dir on
+        # why a single availableNow run cannot express this).
+        for f in sorted(os.listdir(pending)):
+            shutil.move(os.path.join(pending, f), os.path.join(watch, f))
+            q.processAllAvailable()
+    finally:
+        q.stop()
     return spark.table(name)
 
 
@@ -484,19 +483,18 @@ def q_stream_run_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     for q in spark.streams.active:
         if q.name == name:
             q.stop()
-    with pipelines.state_sized_shuffle(spark):
-        q = (
-            pipelines.tumbling_agg(events)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(processingTime="0 seconds")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    q = pipelines.start_stream(
+        spark,
+        pipelines.tumbling_agg(events)
+        .writeStream.format("memory")
+        .queryName(name)
+        .outputMode("complete")
+        .trigger(processingTime="0 seconds"),
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
     return spark.table(name)
 
 
@@ -1361,17 +1359,15 @@ def q_stream_run_recovery_stateful(spark: SparkSession, sf_dir: str) -> DataFram
         for q in spark.streams.active:
             if q.name == name:
                 q.stop()
-        with pipelines.state_sized_shuffle(spark):
-            q = (
-                pipelines.tumbling_agg(pipelines.read_events_stream(spark, src))
-                .writeStream.format("memory")
-                .queryName(name)
-                .outputMode("complete")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        pipelines.start_stream(
+            spark,
+            pipelines.tumbling_agg(pipelines.read_events_stream(spark, src))
+            .writeStream.format("memory")
+            .queryName(name)
+            .outputMode("complete")
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True),
+        ).awaitTermination()
 
     stage(0, "f0")
     run("cb_recst_p1")

@@ -1,10 +1,22 @@
 """SparkSession builder tuned for this engine.
 
-Scale notes (100 TB design intent, local[32] test reality):
-- AQE on: runtime partition coalescing + skew-join splitting replaces any
-  hand-tuned static plan; at cluster scale AQE re-plans from shuffle stats.
-- shuffle.partitions: 32 locally (one per core); on a real cluster this is
+Every engine SQL setting lives in ONE table, ``_RUNTIME_CONF``, and is
+applied once: ``get_spark`` passes it to the builder (``getOrCreate``
+applies runtime builder options to an already-running session too), and
+``configure_session`` applies it to a session the engine did not build
+(the driver contract, ``__spark_entry__``). Caller ``extra_conf`` is laid
+over the table and wins.
+
+Scale notes (100 TB design intent, local test reality):
+- master: ``local[$SPARK_GRAFT_CPUS]``, or ``local[*]`` (every core) when
+  unset.
+- AQE on: runtime partition coalescing + skew-join splitting (both on by
+  default once AQE is) replace any hand-tuned static plan; at cluster
+  scale AQE re-plans from shuffle stats.
+- shuffle.partitions: a constant 32 locally; on a real cluster this is
   set to ~2-3x total executor cores, and AQE coalesces small partitions.
+  Streaming state stores are sized separately, at stream start
+  (streaming/pipelines.start_stream).
 - UTC session timezone: parquet timestamps are naive; both the engine and
   the DuckDB oracle must interpret them identically.
 - Arrow enabled: every Python<->JVM boundary (toPandas, pandas UDFs) is
@@ -22,80 +34,30 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
-
-
-def get_spark(
-    app_name: str = "cellbase-spark",
-    shuffle_partitions: int | None = None,
-    extra_conf: dict | None = None,
-) -> SparkSession:
-    """Build (or fetch) the engine's SparkSession.
-
-    Works both when we own the session (tests, bench) and when the driver
-    hands us one (``__spark_entry__``): `getOrCreate` returns the active
-    session, and `configure_session` (below) applies the runtime-settable
-    subset of our config to it.
-    """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(app_name)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Size-gated SMJ->SHJ conversion: AQE converts a sort-merge join to
-        # a shuffled hash join only when runtime stats show every build-side
-        # partition map fits under this threshold, so it never builds an
-        # unbounded hash table (unlike preferSortMergeJoin=false). Measured
-        # at sf10 (60M lineitem): q_tpch_q5 9.6s SMJ -> 6.3-7.3s converted;
-        # above the threshold the plan stays the spillable SMJ, which is
-        # the robust 100 TB default.
-        .config("spark.sql.adaptive.shuffledHashJoinLocalMapThreshold", "128m")
-        # AQE-only broadcast threshold: unlike the static 10m default this
-        # one acts on ACCURATE runtime shuffle sizes, so a filter-reduced
-        # join side under 64 MB converts to broadcast after the fact
-        # (q_tpch_q5's date+region-reduced orders at sf10: 5.4s -> 3.8s).
-        # Static planning keeps the 10m threshold, and explicit merge
-        # hints (q_knn_join_smj) are preserved through AQE re-planning.
-        .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "64m")
-        .config(
-            "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
-        )
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        # saveAsTable target for bucketed-table tests; keep out of the repo
-        .config("spark.sql.warehouse.dir", "/tmp/cellbase_spark_warehouse")
-    )
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    configure_session(spark)
-    return spark
-
-
 # Conf keys that are safe to set on an already-running session and that the
 # engine depends on for correctness (timezone), for reading the testdata
 # (nanos timestamps), or for sane shuffle sizing (a foreign session's
-# default 200 partitions means 200 tasks — and 200 streaming state-store
-# instances — per 25 MB shuffle at test scale; AQE coalesces batch reads
-# but not the state store). Applied defensively in case the driver built
-# the session.
+# default 200 partitions means 200 tasks per 25 MB shuffle at test scale).
 _RUNTIME_CONF = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    "spark.sql.shuffle.partitions": str(DEFAULT_SHUFFLE_PARTITIONS),
-    # size-gated SMJ->SHJ (see builder note): pure AQE runtime decision,
-    # falls back to spillable SMJ whenever a partition exceeds the cap
+    "spark.sql.shuffle.partitions": "32",
+    # Size-gated SMJ->SHJ conversion: AQE converts a sort-merge join to
+    # a shuffled hash join only when runtime stats show every build-side
+    # partition map fits under this threshold, so it never builds an
+    # unbounded hash table (unlike preferSortMergeJoin=false). Measured
+    # at sf10 (60M lineitem): q_tpch_q5 9.6s SMJ -> 6.3-7.3s converted;
+    # above the threshold the plan stays the spillable SMJ, which is
+    # the robust 100 TB default.
     "spark.sql.adaptive.shuffledHashJoinLocalMapThreshold": "128m",
-    # AQE-only broadcast threshold (see builder note): accurate runtime
-    # sizes justify the higher cap; static planning stays at 10m
+    # AQE-only broadcast threshold: unlike the static 10m default this
+    # one acts on ACCURATE runtime shuffle sizes, so a filter-reduced
+    # join side under 64 MB converts to broadcast after the fact
+    # (q_tpch_q5's date+region-reduced orders at sf10: 5.4s -> 3.8s).
+    # Static planning keeps the 10m threshold, and explicit merge
+    # hints (q_knn_join_smj) are preserved through AQE re-planning.
     "spark.sql.adaptive.autoBroadcastJoinThreshold": "64m",
     # Trust sortBy order on bucketed scans whose buckets are single
     # files (Spark verifies the one-file-per-bucket precondition itself;
@@ -116,8 +78,24 @@ _RUNTIME_CONF = {
 }
 
 
+def get_spark(app_name: str = "cellbase-spark", extra_conf: dict | None = None) -> SparkSession:
+    """Build (or fetch) the engine's SparkSession: the static settings,
+    then ``_RUNTIME_CONF`` with ``extra_conf`` laid over it."""
+    builder = (
+        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]")
+        .appName(app_name)
+        .config("spark.ui.enabled", "false")
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        # saveAsTable target for bucketed-table tests; keep out of the repo
+        .config("spark.sql.warehouse.dir", "/tmp/cellbase_spark_warehouse")
+    )
+    for k, v in {**_RUNTIME_CONF, **(extra_conf or {})}.items():
+        builder = builder.config(k, v)
+    return builder.getOrCreate()
+
+
 def configure_session(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable engine config to an existing session."""
+    """Apply ``_RUNTIME_CONF`` to a session the engine did not build."""
     for k, v in _RUNTIME_CONF.items():
         try:
             spark.conf.set(k, v)

@@ -15,59 +15,48 @@ from __future__ import annotations
 
 import glob
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from cellbase_spark import schemas
 from cellbase_spark.functions.exact import DEC
 
-import contextlib
+_STATE_STORES = "8"
+_START_LOCK = threading.Lock()
 
 
-@contextlib.contextmanager
-def state_sized_shuffle(spark: SparkSession, target: int | str | None = None):
-    """Scope a stream's shuffle-partition count to its STATE volume.
+def start_stream(spark: SparkSession, writer: DataStreamWriter) -> StreamingQuery:
+    """``writer.start()`` with the stream's state stores sized to its
+    STATE volume, not to the batch shuffle count.
 
     A stateful streaming query instantiates one state-store provider per
     shuffle partition, and every micro-batch pays open + snapshot/delta
     maintenance + commit PER STORE — a fixed cost that has nothing to do
-    with batch compute parallelism. Sizing the store count to the core
-    count (the batch default) multiplies that fixed cost for no benefit
-    whenever state is small: measured on this repo's tumbling pipeline,
-    32 stores run the same bounded source ~2x slower than 8 (bench.py's
-    tuned row), and the 4-batch late-arrival key drops 7.8 s -> 3.9 s at
-    8 stores (optimization r15). So streaming runs declare state-sized
-    partitioning: $SPARK_GRAFT_STREAM_SHUFFLE (default 8 — generous for
-    the ~10^3-10^4 keys of the bench states) around stream start/await,
-    restoring the session value after. At deployment this is the same
-    sizing decision made explicitly: state volume / target store size
-    (~100 MB-1 GB per store), NOT the executor-core count; raise the env
-    for wide state. The state partition count is baked into a NEW
-    checkpoint at first batch; restarts from an existing checkpoint keep
-    the checkpointed count regardless, so scoping the conf to the start
-    site is both sufficient and safe.
+    with batch compute parallelism. Measured on this repo's tumbling
+    pipeline, 32 stores run the same bounded source ~2x slower than 8,
+    and the 4-batch late-arrival key drops 7.8 s -> 3.9 s at 8 stores
+    (optimization r15). So every engine stream starts with 8 stores —
+    generous for the ~10^3-10^4 keys of the bench states. At deployment
+    this is the same sizing decision made explicitly: state volume /
+    target store size (~100 MB-1 GB per store), NOT the executor-core
+    count.
 
-    `target` is the per-FAMILY override (r15 VERDICT task #1): state
-    shape differs by operator family — windowed aggs want few stores,
-    a stream-stream join instantiates FOUR stores per partition — so a
-    start site may size itself instead of riding the env default. The
-    env still wins the default; an explicit target wins outright.
-
-    SINGLE-THREADED ASSUMPTION (same contract as operators/ckpt.py): the
-    conf is session-global, so any batch query planned concurrently in
-    the same session during the stream's run would silently inherit the
-    reduced partition count, and nested/concurrent uses could restore a
-    clobbered value. Every engine surface (driver contract, bench,
-    check_oracle, tests) starts and awaits streams sequentially."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if target is None:
-        target = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(target))
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    The swap spans only ``start()``: the query clones the session when it
+    starts, and its offset log pins the count from the first batch on
+    (a restart from an existing checkpoint keeps the checkpointed count
+    regardless). The session's own value is back before this returns, so
+    batch queries planned while the stream runs never see it. The module
+    lock keeps concurrent starts from restoring each other's value."""
+    with _START_LOCK:
+        prev = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", _STATE_STORES)
+        try:
+            return writer.start()
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def _events_ts_arrives_as_long(path: str) -> bool:
@@ -118,7 +107,6 @@ def run_stream_to_memory(
     stream_df: DataFrame,
     name: str,
     output_mode: str = "complete",
-    state_shuffle: int | str | None = None,
 ) -> DataFrame:
     """Execute a streaming DataFrame to completion over its (bounded)
     source and return the materialized result: availableNow trigger +
@@ -130,15 +118,13 @@ def run_stream_to_memory(
     for q in spark.streams.active:
         if q.name == name:
             q.stop()
-    with state_sized_shuffle(spark, state_shuffle):
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    start_stream(
+        spark,
+        stream_df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode)
+        .trigger(availableNow=True),
+    ).awaitTermination()
     return spark.table(name)
 
 

@@ -160,7 +160,7 @@ def diff_plans(old: dict[str, dict], new: dict[str, dict]) -> list[str]:
 
 def main() -> None:
     force = "--force" in sys.argv
-    spark = get_spark("plan-audit", shuffle_partitions=8)
+    spark = get_spark("plan-audit")
     spark.sparkContext.setLogLevel("ERROR")
     qs = queries()
     lines = [

@@ -54,7 +54,7 @@ def main() -> None:
     n_runs = int(sys.argv[3]) if len(sys.argv) > 3 else 3
     out_json = sys.argv[4] if len(sys.argv) > 4 else None
 
-    spark = get_spark("cellbase-staged-layout", shuffle_partitions=n_buckets)
+    spark = get_spark("cellbase-staged-layout")
     spark.sparkContext.setLogLevel("ERROR")
 
     from cellbase_spark.operators.factlayout import build_staged_fact_layout

@@ -16,7 +16,7 @@ SF_SMOKE = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("cellbase-spark-tests", shuffle_partitions=8)
+    s = get_spark("cellbase-spark-tests")
     s.sparkContext.setLogLevel("ERROR")
     yield s
 

@@ -499,3 +499,18 @@ def test_round5_keys_empty_documents(spark, tmp_path):
     assert q_source_overlap(spark, sf).count() == 0
     assert q_span_dedup(spark, sf).count() == 0
     assert q_sessionize_batch(spark, sf).count() == 0
+
+
+def test_build_persisted_frame_released_by_next_build(spark, sf_dir):
+    """A frame a key persists (ckpt.build_persist) is freed by the same
+    thread's NEXT registry build, whatever key that is — not kept until
+    the same key runs again."""
+    from cellbase_spark.queries.graph import _edges
+    from cellbase_spark.registry import queries
+
+    qs = queries()
+    edges = _edges(spark, sf_dir)  # same plan: storageLevel finds the cache
+    qs["q_triangle_count"](spark, sf_dir).collect()
+    assert edges.storageLevel.useMemory, "q_triangle_count persists its edges"
+    qs["q_degree_distribution"](spark, sf_dir).collect()
+    assert not edges.storageLevel.useMemory, "next build left the edges cached"

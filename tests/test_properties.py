@@ -1134,10 +1134,37 @@ def test_g711_codec_exactness():
         assert rate == 8000 and np.array_equal(out, clip)
 
 
+def _tiff_lzw_code_walk(enc: bytes) -> tuple[int, int]:
+    """(widest code width, mid-stream CLEAR count) of a TIFF LZW stream,
+    read code by code on the decoder's early-change width schedule
+    without rebuilding any dictionary entries."""
+    CLEAR, EOI = 256, 257
+    bits, total = int.from_bytes(enc, "big"), len(enc) * 8
+    pos, width, size, widest, clears, first = 0, 9, 258, 9, 0, True
+    prev = False
+    while True:
+        code = (bits >> (total - pos - width)) & ((1 << width) - 1)
+        pos += width
+        widest = max(widest, width)
+        if code == CLEAR:
+            clears += not first
+            width, size, prev = 9, 258, False
+        elif code == EOI:
+            return widest, clears
+        else:
+            if prev and size < 4096:
+                size += 1
+                if size == (1 << width) - 1 and width < 12:
+                    width += 1
+            prev = True
+        first = False
+
+
 def test_tiff_lzw_width_bumps_and_reset():
-    """A low-redundancy 400k-byte stream forces every width bump
-    (9->10->11->12) AND multiple 4094-entry dictionary resets — the
-    deep-stream lanes a hypothesis-sized image can't reach."""
+    """A low-redundancy 12k-byte stream forces every width bump
+    (9->10->11->12) AND several 4094-entry dictionary resets — the
+    deep-stream lanes a hypothesis-sized image can't reach. The code
+    walk proves the stream really reaches both lanes."""
     import numpy as np
 
     from cellbase_spark.operators.multimodal import (
@@ -1146,8 +1173,11 @@ def test_tiff_lzw_width_bumps_and_reset():
     )
 
     rng = np.random.default_rng(11)
-    b = rng.integers(0, 256, 400_000, dtype=np.uint8).tobytes()
-    assert _tiff_lzw_decode(_tiff_lzw_encode(b), len(b)) == b
+    b = rng.integers(0, 256, 12_000, dtype=np.uint8).tobytes()
+    enc = _tiff_lzw_encode(b)
+    widest, clears = _tiff_lzw_code_walk(enc)
+    assert widest == 12 and clears >= 2, (widest, clears)
+    assert _tiff_lzw_decode(enc, len(b)) == b
     # KwKwK lane: the code-equals-table-size case
     b = b"a" * 1000
     assert _tiff_lzw_decode(_tiff_lzw_encode(b), len(b)) == b
