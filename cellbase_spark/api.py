@@ -888,24 +888,23 @@ class CellBase:
 
         sheets = {}
         for name, t in tables.items():
-            _guard_xlsx_export(t.df, name)
             header = t.df.columns
-            sheets[name] = (header, [[row[c] for c in header] for row in t.df.collect()])
+            sheets[name] = (header, [[row[c] for c in header] for row in _collect_small(t.df, name)])
         write_workbook(sheets, path)
 
 
-def _guard_xlsx_export(df: DataFrame, name: str) -> None:
-    """Enforce the 'small only' contract of the driver-collect xlsx paths.
-
-    count() before collect() costs one extra (cheap, column-pruned) job
-    and buys a crisp error instead of a driver OOM when someone points
-    the workbook exporter at a fact table."""
-    n = df.count()
-    if n > XLSX_EXPORT_MAX_ROWS:
+def _collect_small(df: DataFrame, name: str) -> list:
+    """Collect a sheet under the 'small only' contract of the driver-collect
+    workbook paths: one job that ships at most one row past the cap, and a
+    crisp error instead of a driver OOM when someone points the workbook
+    exporter at a fact table."""
+    rows = df.limit(XLSX_EXPORT_MAX_ROWS + 1).collect()
+    if len(rows) > XLSX_EXPORT_MAX_ROWS:
         raise ValueError(
-            f"table {name!r} has {n:,} rows — the workbook export path "
-            f"collects to the driver and is capped at "
+            f"table {name!r} has more than {XLSX_EXPORT_MAX_ROWS:,} rows — the "
+            f"workbook export path collects to the driver and is capped at "
             f"{XLSX_EXPORT_MAX_ROWS:,} rows. For large tables use the "
             f"distributed sink: df.write.format('cellbase_xlsx')"
             f".mode('overwrite').save(dir) (one part-N.xlsx per partition)."
         )
+    return rows

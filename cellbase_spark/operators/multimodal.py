@@ -1972,6 +1972,7 @@ def _tiff_lzw_decode(src: bytes, expected: int) -> bytes:
             nbits += 8
         code = (acc >> (nbits - width)) & ((1 << width) - 1)
         nbits -= width
+        acc &= (1 << nbits) - 1  # keep only unread bits: shifts stay O(1)
         if code == CLEAR:
             reset()
             continue
@@ -2012,6 +2013,7 @@ def _tiff_lzw_encode(src: bytes) -> bytes:
         while bitcnt >= 8:
             out.append((bitbuf >> (bitcnt - 8)) & 0xFF)
             bitcnt -= 8
+        bitbuf &= (1 << bitcnt) - 1  # keep only unwritten bits
 
     d: dict[bytes, int] = {bytes([i]): i for i in range(256)}
     next_code = 258

@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-from cellbase_spark.operators.ckpt import eager_checkpoint as _ckpt
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StringType, StructField, StructType
@@ -134,19 +132,12 @@ def q_sql_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
     # only relation the query touches — registering the full catalog
     # costs ~10 schema reads of pure overhead on this fixed-cost key
     load_table(spark, sf_dir, "customer").createOrReplaceTempView("customer")
-    # the accumulated UnionLoop output is n_rows * chain_depth; the 1M-row
-    # default guardrail trips at ~150k customers even though each level
-    # still shrinks geometrically (runtime-settable, foreign-session safe).
-    # The raised limit is scoped to THIS query: the recursion is
-    # materialized eagerly under the raised value and the prior limit is
-    # restored in finally, so the weakened guardrail never leaks to later
-    # queries on the shared session (r4 advisory). The checkpoint is the
-    # aggregated n_customers-row result, not the UnionLoop intermediate.
-    prior = spark.conf.get("spark.sql.cteRecursionRowLimit", None)
-    spark.conf.set("spark.sql.cteRecursionRowLimit", str(200_000_000))
-    try:
-        return spark.sql(
-            """
+    # the accumulated UnionLoop output is n_rows * chain_depth, over
+    # Spark's 1M-row default at ~150k customers: the engine's settings
+    # table raises spark.sql.cteRecursionRowLimit session-wide
+    # (session._RUNTIME_CONF), so the query stays lazy.
+    return spark.sql(
+        """
 WITH RECURSIVE anc AS (
   SELECT c_custkey AS node, c_custkey AS cur, 0 AS depth FROM customer
   UNION ALL
@@ -159,12 +150,7 @@ FROM anc a JOIN customer c ON a.cur = c.c_custkey
 WHERE a.depth > 0
 GROUP BY a.node
 """
-        ).transform(_ckpt)
-    finally:
-        if prior is not None:
-            spark.conf.set("spark.sql.cteRecursionRowLimit", prior)
-        else:
-            spark.conf.unset("spark.sql.cteRecursionRowLimit")
+    )
 
 
 @register(

@@ -3,7 +3,9 @@
 The reference (cellbase) requires users to *declare* row types on their row
 subclass and coerces spreadsheet strings onto them at load; our analog is
 explicit-first schemas used for CSV/JSONL ingestion and validation, while
-parquet carries its own footer schema.
+parquet carries its own footer schema. Each declaration equals the schema
+Spark infers from its file (tests/test_schemas.py): the timestamp columns
+are written without a UTC adjustment and read as ``timestamp_ntz``.
 """
 
 from __future__ import annotations
@@ -17,7 +19,7 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
-    TimestampType,
+    TimestampNTZType,
 )
 
 
@@ -62,7 +64,7 @@ ORDERS = _st(
     ("o_custkey", LongType()),
     ("o_orderstatus", StringType()),
     ("o_totalprice", DoubleType()),
-    ("o_orderdate", TimestampType()),
+    ("o_orderdate", TimestampNTZType()),
     ("o_orderpriority", StringType()),
 )
 
@@ -77,14 +79,12 @@ LINEITEM = _st(
     ("l_tax", DoubleType()),
     ("l_returnflag", StringType()),
     ("l_linestatus", StringType()),
-    ("l_shipdate", TimestampType()),
+    ("l_shipdate", TimestampNTZType()),
 )
 
-# events.ts arrives as TIMESTAMP(NANOS) parquet; load_table normalizes it to
-# a microsecond TimestampType (this is the post-load schema).
 EVENTS = _st(
     ("event_id", LongType()),
-    ("ts", TimestampType()),
+    ("ts", TimestampNTZType()),
     ("user_id", LongType()),
     ("event_type", StringType()),
     ("value", DoubleType()),

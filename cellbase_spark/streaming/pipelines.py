@@ -21,10 +21,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
-from cellbase_spark import schemas
 from cellbase_spark.functions.exact import DEC
 
-_STATE_STORES = "8"
+_STATE_STORES = "2"
 _START_LOCK = threading.Lock()
 
 
@@ -35,14 +34,22 @@ def start_stream(spark: SparkSession, writer: DataStreamWriter) -> StreamingQuer
     A stateful streaming query instantiates one state-store provider per
     shuffle partition, and every micro-batch pays open + snapshot/delta
     maintenance + commit PER STORE — a fixed cost that has nothing to do
-    with batch compute parallelism. Measured on this repo's tumbling
-    pipeline, 32 stores run the same bounded source ~2x slower than 8,
-    and the 4-batch late-arrival key drops 7.8 s -> 3.9 s at 8 stores
-    (optimization r15). So every engine stream starts with 8 stores —
-    generous for the ~10^3-10^4 keys of the bench states. At deployment
-    this is the same sizing decision made explicitly: state volume /
-    target store size (~100 MB-1 GB per store), NOT the executor-core
-    count.
+    with batch compute parallelism. So every engine stream starts with 2
+    stores, the fastest count measured on 4 cores over sf0.01 (one
+    session, results identical at every count):
+
+    stores  3-batch tumbling  18 q_stream_run_* keys
+    1       2.03 s            58.3 s
+    2       1.91 s            50.8 s
+    4       2.26 s            52.9 s
+    8       2.84 s            61.4 s
+
+    (medians of 2 interleaved runs; the keys column sums per-key medians.
+    An earlier 32 -> 8 cut halved the tumbling pipeline and took the
+    4-batch late-arrival key from 7.8 s to 3.9 s.) The bench states hold
+    ~10^3-10^4 keys. At deployment this is the same sizing decision made
+    explicitly: state volume / target store size (~100 MB-1 GB per
+    store), NOT the executor-core count.
 
     The swap spans only ``start()``: the query clones the session when it
     starts, and its offset log pins the count from the first batch on

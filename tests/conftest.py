@@ -1,6 +1,8 @@
 from __future__ import annotations
 
 import sys
+import uuid
+from contextlib import contextmanager
 from pathlib import Path
 
 import pytest
@@ -37,3 +39,23 @@ def sf_dir_medium():
     if not Path(d).is_dir():
         pytest.skip(f"testdata not present: {d}")
     return d
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """``with spark_jobs() as ids:`` collects into ``ids`` the ids of the
+    Spark jobs run inside the block."""
+
+    @contextmanager
+    def jobs():
+        sc = spark.sparkContext
+        group = f"cb-test-{uuid.uuid4().hex}"
+        ids: list[int] = []
+        sc.setJobGroup(group, group)
+        try:
+            yield ids
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            ids.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+    return jobs

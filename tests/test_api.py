@@ -271,6 +271,15 @@ def test_xlsx_export_guard_rejects_fact_tables(spark, sf_dir, tmp_path, monkeypa
     cb.table("region").save(str(tmp_path / "region.xlsx"), fmt="xlsx")
 
 
+def test_workbook_export_runs_one_job_per_sheet(spark, spark_jobs, sf_dir, tmp_path):
+    """The row cap and the collect share one job per sheet."""
+    cb = CellBase(spark, sf_dir)
+    sheets = {n: cb.table(n) for n in ("region", "nation", "supplier")}
+    with spark_jobs() as ids:
+        cb.export_workbook(sheets, str(tmp_path / "dims.xlsx"))
+    assert len(ids) == 3
+
+
 def test_duplicated_spans_api(spark):
     """duplicated_spans finds the shared 4-token span across two rows and
     excludes spans unique to one row; counts and min_key are exact."""
@@ -351,7 +360,8 @@ def test_api_checkpoint_survives_registry_build(spark, sf_dir):
     # API-created checkpoints must NOT be in the registry release list
     assert not ckpt.live_handles(), "API build recorded checkpoint handles"
     # run a registered query that itself checkpoints, end-to-end
-    REGISTRY["q_sql_recursive"].fn(spark, sf_dir).collect()
+    REGISTRY["q_cc_iterative"].fn(spark, sf_dir).collect()
+    assert ckpt.live_handles(), "the registry build pinned nothing"
     # the API frame is still consumable — its blocks were never freed
     assert clusters.count() > 0
 

@@ -1185,6 +1185,22 @@ def test_tiff_lzw_width_bumps_and_reset():
     assert _tiff_lzw_decode(_tiff_lzw_encode(b""), 0) == b""
 
 
+def test_tiff_lzw_large_strip_roundtrips():
+    """A 400 kB random strip round-trips. Encoder and decoder keep only the
+    unconsumed bits in their accumulators; an accumulator holding the
+    whole stream makes every shift copy it, and this strip then takes
+    minutes instead of about a second."""
+    import numpy as np
+
+    from cellbase_spark.operators.multimodal import (
+        _tiff_lzw_decode,
+        _tiff_lzw_encode,
+    )
+
+    b = np.random.default_rng(7).integers(0, 256, 400_000, dtype=np.uint8).tobytes()
+    assert _tiff_lzw_decode(_tiff_lzw_encode(b), len(b)) == b
+
+
 @given(
     n=st.integers(min_value=1, max_value=200),
     n_ch=st.sampled_from([1, 2, 4]),
