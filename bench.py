@@ -353,10 +353,10 @@ def measure_streaming(spark, sf_dir: str, runs: int = 2) -> dict:
     item 7)."""
     import time as _time
 
-    from cellbase_spark.queries.streaming import _events_stream_dir
+    from cellbase_spark.queries.streaming import _table_stream_dir
     from cellbase_spark.streaming import pipelines as sp
 
-    ev_path = _events_stream_dir(sf_dir)  # file source needs a directory
+    ev_path = _table_stream_dir(sf_dir, "events")  # file source needs a directory
     n_events = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).count()
 
     def one_run() -> float:

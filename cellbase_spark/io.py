@@ -25,7 +25,11 @@ Scale notes:
 
 from __future__ import annotations
 
+import hashlib
 import os
+import re
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -168,6 +172,73 @@ def fan_out_barrier(df: DataFrame) -> DataFrame:
     return eager_checkpoint(df.repartition(target))
 
 
+def _dir_tag(sf_dir: str) -> str:
+    """A data directory's identity in scratch names: its basename (for
+    people reading the temp dir) plus a SHA-1 of the FULL normalized path,
+    so two dirs sharing a basename (/a/sf1 and /b/sf1) never share a
+    scratch home or a catalog name, and a layout built over one is never
+    served for the other."""
+    norm = os.path.abspath(os.path.normpath(sf_dir))
+    digest = hashlib.sha1(norm.encode()).hexdigest()[:10]
+    return f"{os.path.basename(norm) or 'sf'}_{digest}"
+
+
+def scratch_path(sf_dir: str, *parts: str) -> str:
+    """Per-process scratch home for artifacts derived from `sf_dir`, keyed
+    by the directory's identity and the PID, so concurrent runs and
+    interleaved data dirs never clobber each other's data mid-query.
+    `publish.vacuum` sweeps these `cellbase_spark_*` dirs and skips the
+    current process's own (the `_<pid>` suffix)."""
+    return os.path.join(
+        tempfile.gettempdir(),
+        f"cellbase_spark_{_dir_tag(sf_dir)}_{os.getpid()}",
+        *parts,
+    )
+
+
+def scratch_table(sf_dir: str, name: str) -> str:
+    """Catalog-safe table name with the same directory + PID scoping."""
+    tag = re.sub(r"[^A-Za-z0-9_]", "_", f"{_dir_tag(sf_dir)}_{os.getpid()}")
+    return f"{name}_{tag}"
+
+
+def write_bucketed(
+    df: DataFrame,
+    table: str,
+    path: str,
+    key: str,
+    n_buckets: int,
+    pre_partitioned: bool = False,
+) -> None:
+    """Write df as an external table at `path`, bucketed and sorted on
+    `key`, ONE file per bucket: the input is hash-partitioned on the key
+    to exactly `n_buckets` partitions first (murmur3-pmod is the bucket-id
+    function), so each write task holds whole buckets. Spark trusts the
+    sortBy order — no Sort under a bucket-local SMJ — only for single-file
+    buckets. `pre_partitioned=True` says the input already arrives that
+    way (the staged fact join); either way the file count is checked
+    after the write and a layout that lost the alignment fails loudly
+    instead of silently serving unsorted buckets."""
+    df.sparkSession.sql(f"DROP TABLE IF EXISTS {table}")
+    shutil.rmtree(path, ignore_errors=True)
+    w = df if pre_partitioned else df.repartition(n_buckets, F.col(key))
+    (
+        w.write.mode("overwrite")
+        .bucketBy(n_buckets, key)
+        .sortBy(key)
+        .option("path", path)
+        .format("parquet")
+        .saveAsTable(table)
+    )
+    files = [f for f in os.listdir(path) if f.endswith(".parquet")]
+    if len(files) > n_buckets:
+        raise RuntimeError(
+            f"{table}: {len(files)} files > {n_buckets} buckets — the input "
+            "partitioning did not align with the bucket spec (sortBy trust "
+            "would be silently lost)"
+        )
+
+
 def ensure_bucketed_table(
     spark: SparkSession, sf_dir: str, name: str, key: str, n_buckets: int = 16
 ) -> str:
@@ -185,43 +256,19 @@ def ensure_bucketed_table(
     read cost to one bucket's row groups: the dictionary-lookup story the
     reference's `get row by id` needs at scale.
 
-    The table is EXTERNAL (explicit path under the system temp dir, keyed
-    by sf + PID like queries/scans.scratch_path) so concurrent runs never
-    clobber each other, and it is built once per (process, sf): repeat
-    calls return the registered table directly."""
-    import hashlib
-    import re
-    import shutil
-    import tempfile
-
-    # Key the build-once cache on the FULL normalized directory, not its
-    # basename: two data dirs sharing a basename (/a/sf1 and /b/sf1) in
-    # one process must not collide on a catalog name, or the second
-    # silently serves the first directory's rows (r12 advice).
-    norm = os.path.abspath(os.path.normpath(sf_dir))
-    digest = hashlib.sha1(norm.encode()).hexdigest()[:10]
-    tag = f"{os.path.basename(norm) or 'sf'}_{digest}_{os.getpid()}"
-    safe = re.sub(r"[^A-Za-z0-9_]", "_", tag)
-    tname = f"cb_keyed_{name}_{n_buckets}_{safe}"
-    if spark.catalog.tableExists(tname):
-        return tname
-    path = os.path.join(
-        tempfile.gettempdir(), f"cellbase_spark_{tag}", "keyed", f"{name}_{n_buckets}"
-    )
-    shutil.rmtree(path, ignore_errors=True)
-    (
-        # one file per bucket (repartition on the bucket key first) so the
-        # sorted-bucket scan order is trusted downstream (same contract as
-        # the S12 bucketed-join layouts)
-        load_table(spark, sf_dir, name)
-        .repartition(n_buckets, F.col(key))
-        .write.mode("overwrite")
-        .bucketBy(n_buckets, key)
-        .sortBy(key)
-        .option("path", path)
-        .format("parquet")
-        .saveAsTable(tname)
-    )
+    The table is EXTERNAL, under `scratch_path` and named by
+    `scratch_table`, so concurrent runs never clobber each other, and it
+    is built once per (process, data dir): repeat calls return the
+    registered table directly."""
+    tname = scratch_table(sf_dir, f"cb_keyed_{name}_{n_buckets}")
+    if not spark.catalog.tableExists(tname):
+        write_bucketed(
+            load_table(spark, sf_dir, name),
+            tname,
+            scratch_path(sf_dir, "keyed", f"{name}_{n_buckets}"),
+            key,
+            n_buckets,
+        )
     return tname
 
 
@@ -237,8 +284,6 @@ def source_signature(sf_dir: str, *names: str) -> str:
     name), so a vacuum cron run with `pin_retention_sec` reclaims it
     once the window lapses — superseded homes age out; they are not
     immortal (r14 ADVICE)."""
-    import hashlib
-
     h = hashlib.sha1()
     for name in sorted(names):
         p = os.path.join(sf_dir, f"{name}.parquet")
@@ -259,18 +304,14 @@ def source_signature(sf_dir: str, *names: str) -> str:
 def durable_path(sf_dir: str, signature: str, *parts: str) -> str:
     """Session-INDEPENDENT artifact home: keyed by sf path + source
     signature, never by PID — the build-at-ingest-serve-forever layout
-    (contrast queries/scans.scratch_path, whose PID key is sandbox
-    concurrency hygiene for per-process scratch). Lives under the same
-    scratch root vacuum sweeps; published artifacts inside it are
-    protected by their durable pins."""
-    import hashlib
-    import tempfile
-
-    norm = os.path.abspath(os.path.normpath(sf_dir))
-    digest = hashlib.sha1(norm.encode()).hexdigest()[:10]
-    tag = f"{os.path.basename(norm) or 'sf'}_{digest}_{signature}"
+    (contrast scratch_path, whose PID key is concurrency hygiene for
+    per-process scratch). Lives under the same scratch root vacuum
+    sweeps; published artifacts inside it are protected by their durable
+    pins."""
     return os.path.join(
-        tempfile.gettempdir(), f"cellbase_spark_durable_{tag}", *parts
+        tempfile.gettempdir(),
+        f"cellbase_spark_durable_{_dir_tag(sf_dir)}_{signature}",
+        *parts,
     )
 
 
@@ -283,26 +324,14 @@ sf_dir, name, key, n_buckets, table, home = (
 from cellbase_spark.session import get_spark
 spark = get_spark("cellbase-ingest-bucketed", extra_conf={"spark.sql.shuffle.partitions": "8"})
 spark.sparkContext.setLogLevel("ERROR")
-from pyspark.sql import functions as F
-from cellbase_spark.io import load_table
+from cellbase_spark.io import load_table, write_bucketed
 from cellbase_spark.operators.publish import publish_artifact
 
-
-def writer(tmp_table, tmp_path):
-    (
-        load_table(spark, sf_dir, name)
-        .repartition(n_buckets, F.col(key))
-        .write.mode("overwrite")
-        .bucketBy(n_buckets, key)
-        .sortBy(key)
-        .option("path", tmp_path)
-        .format("parquet")
-        .saveAsTable(tmp_table)
-    )
-
-
 publish_artifact(
-    spark, table, home, writer,
+    spark, table, home,
+    lambda tt, tp: write_bucketed(
+        load_table(spark, sf_dir, name), tt, tp, key, n_buckets
+    ),
     {"cellbase.kind": "bucketed_layout", "cellbase.key": key},
 )
 spark.stop()

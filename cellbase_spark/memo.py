@@ -1,11 +1,11 @@
 """Per-SparkSession memoization that dies with the session.
 
-Round-10 fix (r9 ADVICE low): the build-once memos (bucketed-layout
-table names, ASIA nation keys, fan_out partition counts, ANN index
-table properties) used to key on id(spark) — after a SparkSession is
+Round-10 fix (r9 ADVICE low): the build-once memos (table schemas,
+ASIA nation keys, fan_out partition counts, ANN index table
+properties) used to key on id(spark) — after a SparkSession is
 garbage-collected, CPython can hand the SAME id to a brand-new session,
-which would then silently inherit the dead session's cached table
-names, nation keys, partition counts, or index geometry. Holding the
+which would then silently inherit the dead session's cached
+schemas, nation keys, partition counts, or index geometry. Holding the
 session itself in a WeakKeyDictionary makes the cache lifetime EXACTLY
 the session lifetime: entries are unreachable the moment the session
 is, and a recycled id can never alias into them.

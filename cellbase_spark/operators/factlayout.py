@@ -1,20 +1,21 @@
 """Staged build of the denormalized bucketed fact layout — as a
-REUSABLE operator, for both the in-process quartet bench
-(scripts/build_fact_layout_staged.py) and the durable cross-session
+REUSABLE operator, for both the in-process layout
+(queries/joins._fact_bucketed_layout) and the durable cross-session
 ingest (queries/joins._fact_bucketed_layout_attached).
 
-Why staged (r14 verdict #1, proven at sf100 in round 15): the one-shot
+Why staged (r14 verdict #1, proven at sf100 in round 15): a one-shot
 layout build shuffles the widened fact table TWICE — once for the
 orders⋈customer denorm SMJ, once for the bucket repartition — a ~90 GB
 transient peak at sf100. Staging materializes orders⋈customer first as
 a TRANSIENT table bucketed on o_orderkey, so the big join's probe side
 arrives pre-partitioned and never shuffles; the fact side shuffles
-exactly once, to exactly `n_buckets` partitions with AQE disabled,
-where HashPartitioning's murmur3-pmod IS the bucket-id function — the
-join output lands one-partition-per-bucket and the bucketBy writer
-needs no second shuffle. Verified after every write: a file count above
-`n_buckets` means the alignment was lost (sortBy trust would silently
-vanish) and the build FAILS rather than publish a slow layout.
+exactly once, by an explicit `repartition(n_buckets, l_orderkey)` —
+HashPartitioning's murmur3-pmod IS the bucket-id function, so the join
+output lands one-partition-per-bucket and the bucketBy writer needs no
+second shuffle. `io.write_bucketed` checks the file count after every
+write: a count above `n_buckets` means the alignment was lost (sortBy
+trust would silently vanish) and the build FAILS rather than serve or
+publish a slow layout.
 
 At a deployment this halves ingest shuffle volume at any scale; the
 bucket count is the partition-sizing lever (128 at sf100 ≈ 0.4 GB of
@@ -28,7 +29,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cellbase_spark.io import load_table
+from cellbase_spark.io import load_table, write_bucketed
 
 WIDE_LINEITEM_COLS = (
     "l_orderkey", "l_partkey", "l_suppkey", "l_quantity",
@@ -37,16 +38,6 @@ WIDE_LINEITEM_COLS = (
 OC_COLS = (
     "o_orderkey", "o_orderdate", "o_orderstatus", "c_mktsegment", "c_nationkey"
 )
-
-
-def _bucket_file_check(path: str, name: str, n_buckets: int) -> None:
-    files = [f for f in os.listdir(path) if f.endswith(".parquet")]
-    if len(files) > n_buckets:
-        raise RuntimeError(
-            f"{name}: {len(files)} files > {n_buckets} buckets — the join "
-            "partitioning did not align with the bucket spec (sortBy "
-            "trust would be silently lost); refusing to publish"
-        )
 
 
 def staged_oc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -65,33 +56,6 @@ def staged_oc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    path: str,
-    key: str,
-    n_buckets: int,
-    pre_partitioned: bool = False,
-) -> None:
-    """One key-bucketed, key-sorted external table, ONE file per bucket.
-    `pre_partitioned=True` asserts the input already arrives hash-
-    partitioned to the bucket spec (the staged join elision) — verified
-    by file count, loud failure otherwise."""
-    spark = df.sparkSession
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    shutil.rmtree(path, ignore_errors=True)
-    w = df if pre_partitioned else df.repartition(n_buckets, F.col(key))
-    (
-        w.write.mode("overwrite")
-        .bucketBy(n_buckets, key)
-        .sortBy(key)
-        .option("path", path)
-        .format("parquet")
-        .saveAsTable(table)
-    )
-    _bucket_file_check(path, table, n_buckets)
-
-
 def build_staged_fact_layout(
     spark: SparkSession,
     sf_dir: str,
@@ -105,9 +69,9 @@ def build_staged_fact_layout(
 ) -> tuple[str, str]:
     """Build the denormalized bucketed fact pair with ONE fact shuffle.
 
-    publish=False (bench/scratch face): tables land directly at
+    publish=False (scratch face): tables land directly at
     `scratch_dir/<table>` under the given catalog names — the
-    per-process form `_fact_bucketed_layout` consumes.
+    per-process form `_fact_bucketed_layout` builds.
     publish=True (durable face): each table goes through
     publish_artifact under its naming base (`home_l`/`home_o`), so a
     FOREIGN session can attach_artifact both — the manifest records the
@@ -115,6 +79,8 @@ def build_staged_fact_layout(
     elision survive process death). t_o publishes FIRST and t_l LAST,
     so the presence of t_l's pointer implies the whole layout is
     serveable (foreign_ingest waits on exactly that pointer)."""
+    if publish and not (home_l and home_o):
+        raise ValueError("publish=True requires home_l and home_o")
     oc_t = f"{t_l}_oc_stage"
     oc_path = os.path.join(scratch_dir, oc_t)
     try:
@@ -125,49 +91,30 @@ def build_staged_fact_layout(
         orders = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_custkey", "o_orderdate", "o_orderstatus"
         )
-        wide = load_table(spark, sf_dir, "lineitem").select(*WIDE_LINEITEM_COLS)
+        wide = (
+            load_table(spark, sf_dir, "lineitem")
+            .select(*WIDE_LINEITEM_COLS)
+            .repartition(n_buckets, F.col("l_orderkey"))
+        )
         wide = wide.join(
             spark.table(oc_t).withColumnRenamed("o_orderkey", "_ok"),
             wide.l_orderkey == F.col("_ok"),
         ).drop("_ok")
 
-        prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-        prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-        spark.conf.set("spark.sql.shuffle.partitions", str(n_buckets))
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try:
-            if publish:
-                from cellbase_spark.operators.publish import publish_artifact
+        from cellbase_spark.operators.publish import publish_artifact
 
-                if not (home_l and home_o):
-                    raise ValueError("publish=True requires home_l and home_o")
-                publish_artifact(
-                    spark, t_o, home_o,
-                    lambda tt, tp: write_bucketed(
-                        orders, tt, tp, "o_orderkey", n_buckets
-                    ),
-                    {"cellbase.kind": "fact_layout_orders"},
-                )
-                publish_artifact(
-                    spark, t_l, home_l,
-                    lambda tt, tp: write_bucketed(
-                        wide, tt, tp, "l_orderkey", n_buckets,
-                        pre_partitioned=True,
-                    ),
-                    {"cellbase.kind": "fact_layout_lineitem_denorm"},
-                )
+        def land(df, table, home, key, kind, pre_partitioned=False):
+            def write(tt, tp):
+                write_bucketed(df, tt, tp, key, n_buckets, pre_partitioned)
+
+            if publish:
+                publish_artifact(spark, table, home, write, {"cellbase.kind": kind})
             else:
-                write_bucketed(
-                    orders, t_o, os.path.join(scratch_dir, t_o),
-                    "o_orderkey", n_buckets,
-                )
-                write_bucketed(
-                    wide, t_l, os.path.join(scratch_dir, t_l),
-                    "l_orderkey", n_buckets, pre_partitioned=True,
-                )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-            spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+                write(table, os.path.join(scratch_dir, table))
+
+        land(orders, t_o, home_o, "o_orderkey", "fact_layout_orders")
+        land(wide, t_l, home_l, "l_orderkey", "fact_layout_lineitem_denorm",
+             pre_partitioned=True)
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {oc_t}")
         shutil.rmtree(oc_path, ignore_errors=True)

@@ -751,9 +751,9 @@ def vacuum(
     """Retention sweep for the engine's on-disk leftovers (round 13,
     r12 verdict #6). Publish sweeps its own `__build_*` temps at the
     NEXT publish of the same artifact, but process-keyed scratch
-    (`cellbase_spark_*` dirs from scratch_path / ensure_bucketed_table /
-    the workbook round-trip keys) and superseded generation data from
-    runs that never published again accumulate across process
+    (the `cellbase_spark_*` dirs: `io.scratch_path` homes and the
+    workbook round-trip keys' temp dirs) and superseded generation data
+    from runs that never published again accumulate across process
     lifetimes. This is the explicit janitor a deployment crons.
 
     Deletes, directly under the system temp dir (or `scratch_root`),

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from cellbase_spark import schemas
 from cellbase_spark.functions.exact import dsum
-from cellbase_spark.queries.scans import scratch_path
+from cellbase_spark.io import scratch_path, scratch_table
 from cellbase_spark.registry import register
 
 
@@ -136,7 +136,6 @@ def q_facade_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     the engine path. Probe cost: nprobe=2 PartitionFilters-pruned
     lists, flat in corpus size."""
     from cellbase_spark.api import CellBase
-    from cellbase_spark.queries.scans import scratch_path, scratch_table
 
     cb = CellBase(spark, sf_dir)
     emb = cb.table("embeddings")
@@ -213,7 +212,6 @@ def q_facade_edit(spark: SparkSession, sf_dir: str) -> DataFrame:
     before the write); nation is a dim sheet by contract — fact-table
     mutation is q_merge_upsert's job."""
     from cellbase_spark.api import CellBase
-    from cellbase_spark.queries.scans import scratch_path
 
     cb = CellBase(spark, sf_dir)
     edited = (

@@ -12,7 +12,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cellbase_spark.io import load_table
+from cellbase_spark.io import (
+    load_table,
+    scratch_path,
+    scratch_table,
+    write_bucketed,
+)
 from cellbase_spark.operators.ckpt import build_persist
 from cellbase_spark.registry import register
 
@@ -193,32 +198,20 @@ def _adj_bucketed_layout(spark: SparkSession, sf_dir: str) -> str:
     per-round shuffle is the contribution transpose itself, which is the
     irreducible data motion of distributed PageRank. Degree is baked
     into the table so no per-round degree join/agg exists at all."""
-    import os
-    import shutil
-
-    from cellbase_spark.queries.scans import scratch_path, scratch_table
-
-    base = scratch_path(sf_dir, "adjbucketed")
     t_adj = scratch_table(sf_dir, "cb_adjb_edges")
     if not spark.catalog.tableExists(t_adj):
-        spark.sql(f"DROP TABLE IF EXISTS {t_adj}")
-        shutil.rmtree(os.path.join(base, t_adj), ignore_errors=True)
         e = _edges(spark, sf_dir)
         adj = (
             e.select(F.col("u").alias("src"), F.col("v").alias("dst"))
             .unionAll(e.select(F.col("v").alias("src"), F.col("u").alias("dst")))
         )
         deg = adj.groupBy("src").agg(F.count(F.lit(1)).alias("degree"))
-        (
-            adj.join(deg, "src")
-            # one file per bucket so Spark trusts the sortBy order
-            .repartition(32, F.col("src"))
-            .write.mode("overwrite")
-            .bucketBy(32, "src")
-            .sortBy("src")
-            .option("path", os.path.join(base, t_adj))
-            .format("parquet")
-            .saveAsTable(t_adj)
+        write_bucketed(
+            adj.join(deg, "src"),
+            t_adj,
+            scratch_path(sf_dir, "adjbucketed", t_adj),
+            "src",
+            32,
         )
     return t_adj
 

@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cellbase_spark.functions.exact import dsum, dsum_sql
-from cellbase_spark.io import fan_out_barrier, load_table
+from cellbase_spark.io import fan_out, load_table
 from cellbase_spark.registry import register
 
 _EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
@@ -54,7 +54,7 @@ GROUP BY CUBE (l_returnflag, l_linestatus)
 )
 def q_agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE(returnflag, linestatus): all 2^2 grouping sets in one pass."""
-    li = fan_out_barrier(
+    li = fan_out(
         load_table(spark, sf_dir, "lineitem").select(
             "l_returnflag", "l_linestatus", "l_quantity"
         )

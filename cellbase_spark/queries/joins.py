@@ -14,7 +14,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cellbase_spark.functions.exact import dsum, dsum_sql
-from cellbase_spark.io import load_table
+from cellbase_spark.io import load_table, scratch_path, scratch_table
+from cellbase_spark.operators.factlayout import build_staged_fact_layout
 from cellbase_spark.registry import register
 
 
@@ -372,76 +373,18 @@ def _fact_bucketed_layout(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     lanes reads the same bytes as before), so widening the shared table
     costs the non-users nothing. The plain bucketed orders table is
     still written for queries that genuinely need order-grain rows.
-    Returns the (lineitem, orders) table names."""
-    import os
-    import shutil
+    Returns the (lineitem, orders) table names.
 
-    from cellbase_spark.queries.scans import scratch_path, scratch_table
-
-    from cellbase_spark.memo import session_memo
-
-    layout_memo = session_memo(spark, "fact_layout")
-    memo = layout_memo.get(sf_dir)
-    if memo is not None:
-        return memo
-
-    base = scratch_path(sf_dir, "factbucketed")
+    Built by the staged single-fact-shuffle build
+    (operators/factlayout.py), the same one the durable attach face
+    uses; the lineitem table is written last, so its presence in the
+    catalog means the pair is complete."""
     t_l = scratch_table(sf_dir, "cb_factb_lineitem")
     t_o = scratch_table(sf_dir, "cb_factb_orders")
-    oc = (
-        load_table(spark, sf_dir, "orders")
-        .select("o_orderkey", "o_custkey", "o_orderdate", "o_orderstatus")
-        .join(
-            load_table(spark, sf_dir, "customer").select(
-                "c_custkey", "c_mktsegment", "c_nationkey"
-            ),
-            F.col("o_custkey") == F.col("c_custkey"),
+    if not spark.catalog.tableExists(t_l):
+        build_staged_fact_layout(
+            spark, sf_dir, 32, t_l, t_o, scratch_path(sf_dir, "factbucketed")
         )
-        .select(
-            "o_orderkey", "o_orderdate", "o_orderstatus", "c_mktsegment", "c_nationkey"
-        )
-    )
-    wide = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey",
-        "l_partkey",
-        "l_suppkey",
-        "l_quantity",
-        "l_extendedprice",
-        "l_discount",
-        "l_shipdate",
-    )
-    wide = wide.join(
-        oc.withColumnRenamed("o_orderkey", "_ok"), wide.l_orderkey == F.col("_ok")
-    ).drop("_ok")
-    specs = (
-        (t_l, wide, "l_orderkey"),
-        (
-            t_o,
-            load_table(spark, sf_dir, "orders").select(
-                "o_orderkey", "o_custkey", "o_orderdate", "o_orderstatus"
-            ),
-            "o_orderkey",
-        ),
-    )
-    for name, df, key in specs:
-        if spark.catalog.tableExists(name):
-            continue  # PID+sf-scoped scratch: data is immutable per sf
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        shutil.rmtree(os.path.join(base, name), ignore_errors=True)
-        (
-            # repartition to the bucket count on the bucket key FIRST so
-            # each bucket is exactly ONE file — Spark only trusts sortBy
-            # order (and skips the per-partition re-Sort under the SMJ)
-            # for single-file buckets
-            df.repartition(32, F.col(key))
-            .write.mode("overwrite")
-            .bucketBy(32, key)
-            .sortBy(key)
-            .option("path", os.path.join(base, name))
-            .format("parquet")
-            .saveAsTable(name)
-        )
-    layout_memo[sf_dir] = (t_l, t_o)
     return t_l, t_o
 
 

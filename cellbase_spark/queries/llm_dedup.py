@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cellbase_spark.io import fan_out_barrier, load_table
+from cellbase_spark.io import fan_out_barrier, load_table, scratch_path
 from cellbase_spark.operators.dedup import (
     blocked_bitmap_jaccard_pairs,
     connected_components,
@@ -937,7 +937,6 @@ def _corpus_band_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from cellbase_spark.operators.dedup import lsh_band_keys_fused
-    from cellbase_spark.queries.scans import scratch_path
 
     out = scratch_path(sf_dir, "bandtable", "corpus_bands")
     if not os.path.exists(os.path.join(out, "_SUCCESS")):
@@ -1086,7 +1085,6 @@ def q_dedup_band_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from cellbase_spark.operators.dedup import lsh_band_keys_fused
-    from cellbase_spark.queries.scans import scratch_path
 
     band_tab = _corpus_band_table(spark, sf_dir)
     out = scratch_path(sf_dir, "bandtable_next", "corpus_bands")
@@ -1203,8 +1201,6 @@ def _corpus_fp_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     incremental daily loop probes this instead of pairwise-verifying
     mega-cliques — O(1) rows per batch doc regardless of clique size."""
     import os
-
-    from cellbase_spark.queries.scans import scratch_path
 
     out = scratch_path(sf_dir, "fptable", "corpus_fps")
     if not os.path.exists(os.path.join(out, "_SUCCESS")):
@@ -1339,7 +1335,6 @@ def _generation_probe(spark: SparkSession, sf_dir: str, day: int) -> DataFrame:
         incremental_dedup_pairs,
         lsh_band_keys_fused,
     )
-    from cellbase_spark.queries.scans import scratch_path
 
     # shared-tokenize barrier (r16, guide §2 — see q_dedup_band_delete):
     # one 32-way checkpoint of (doc_id, text) feeds the batch bands and
@@ -1591,7 +1586,6 @@ def _ensure_band_tombstones(spark: SparkSession, sf_dir: str) -> str:
         delete_from_dedup_index,
         read_dedup_tombstones,
     )
-    from cellbase_spark.queries.scans import scratch_path
 
     _corpus_band_table(spark, sf_dir)  # materialize the index first
     band_dir = scratch_path(sf_dir, "bandtable", "corpus_bands")

@@ -13,7 +13,12 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from cellbase_spark.io import fan_out_barrier, load_table
+from cellbase_spark.io import (
+    fan_out_barrier,
+    load_table,
+    scratch_path,
+    scratch_table,
+)
 from cellbase_spark.operators.similarity import (
     cosine_expr,
     cosine_topk,
@@ -712,7 +717,6 @@ def _ann_index_table(spark: SparkSession, sf_dir: str) -> str:
     ever prune it, and the catalog (metastore model) holds the partition
     metadata so a probe never pays directory discovery."""
     from cellbase_spark.operators.similarity import build_ann_index
-    from cellbase_spark.queries.scans import scratch_path, scratch_table
 
     t = scratch_table(sf_dir, "cb_annindex")
     if not _index_ready(spark, t):
@@ -990,7 +994,6 @@ def _ann_delta_table(spark: SparkSession, sf_dir: str) -> str:
     (the LSM/generations discipline q_dedup_band_update established for
     the dedup band table, applied to the ANN index)."""
     from cellbase_spark.operators.similarity import build_ann_index
-    from cellbase_spark.queries.scans import scratch_path, scratch_table
 
     t = scratch_table(sf_dir, "cb_annindex_d1")
     if not _index_ready(spark, t):
@@ -1425,7 +1428,6 @@ def _ensure_trained_ann_index(spark: SparkSession, sf_dir: str) -> str:
         train_ivf_centroids,
         train_pq_codebook,
     )
-    from cellbase_spark.queries.scans import scratch_path, scratch_table
 
     t = scratch_table(sf_dir, "cb_annindex_tr")
     if not _index_ready(spark, t):
@@ -2256,7 +2258,6 @@ def _ensure_trained_ann_delta(spark: SparkSession, sf_dir: str) -> str:
         decode_index_props,
         table_props,
     )
-    from cellbase_spark.queries.scans import scratch_path, scratch_table
 
     t = scratch_table(sf_dir, "cb_anndelta_tr")
     if not _index_ready(spark, t):
@@ -2385,7 +2386,6 @@ def _ensure_trained_ann_delta2(spark: SparkSession, sf_dir: str) -> str:
         decode_index_props,
         table_props,
     )
-    from cellbase_spark.queries.scans import scratch_path, scratch_table
 
     t = scratch_table(sf_dir, "cb_anndelta2_tr")
     if not _index_ready(spark, t):
@@ -2410,7 +2410,6 @@ def _ensure_trained_ann_compact(spark: SparkSession, sf_dir: str) -> str:
     compacted table). Probes then resolve ONE catalog table and open
     one file per probed leaf, however many delta days accumulated."""
     from cellbase_spark.operators.similarity import compact_ann_index
-    from cellbase_spark.queries.scans import scratch_path, scratch_table
 
     t = scratch_table(sf_dir, "cb_anncompact_tr")
     if not _index_ready(spark, t):
@@ -2491,7 +2490,6 @@ def _ensure_trained_ann_compact_partial(spark: SparkSession, sf_dir: str) -> str
         compact_ann_index_partial,
         table_props,
     )
-    from cellbase_spark.queries.scans import scratch_path, scratch_table
 
     t = scratch_table(sf_dir, "cb_annpart_tr")
     absorbed_done = _index_ready(spark, t) and table_props(
@@ -2617,7 +2615,6 @@ def _ensure_trained_ann_delete(spark: SparkSession, sf_dir: str) -> str:
         delete_from_ann_index,
         table_props,
     )
-    from cellbase_spark.queries.scans import scratch_path, scratch_table
 
     t = scratch_table(sf_dir, "cb_anndel_tr")
     ready = _index_ready(spark, t) and int(
@@ -2683,7 +2680,6 @@ def _ensure_trained_ann_delete_compact(spark: SparkSession, sf_dir: str) -> str:
     row and the new table starts with no tombstone side-table at all
     (the physical half of the delete contract)."""
     from cellbase_spark.operators.similarity import compact_ann_index
-    from cellbase_spark.queries.scans import scratch_path, scratch_table
 
     t = scratch_table(sf_dir, "cb_anndelc_tr")
     if not _index_ready(spark, t):
@@ -2747,7 +2743,6 @@ def _ensure_trained_ann_lifecycle(spark: SparkSession, sf_dir: str) -> str:
         compact_ann_index_partial,
         table_props,
     )
-    from cellbase_spark.queries.scans import scratch_path, scratch_table
 
     t = scratch_table(sf_dir, "cb_annlife_tr")
     if not _index_ready(spark, t):

@@ -11,7 +11,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cellbase_spark.io import fan_out_barrier, load_table
+from cellbase_spark.io import (
+    fan_out_barrier,
+    load_table,
+    scratch_path,
+    scratch_table,
+)
 from cellbase_spark.operators.text import (
     LANG_MARKERS,
     lang_id,
@@ -880,7 +885,6 @@ def _ensure_bm25_index(spark: SparkSession, sf_dir: str) -> str:
     artifact the indexed serving key probes."""
     from cellbase_spark.operators.similarity import table_props
     from cellbase_spark.operators.text import build_bm25_index
-    from cellbase_spark.queries.scans import scratch_path, scratch_table
 
     t = scratch_table(sf_dir, "cb_bm25idx")
     ready = spark.catalog.tableExists(t) and "cellbase.n_docs" in table_props(
@@ -936,7 +940,6 @@ def _ensure_bm25_base_delta(spark: SparkSession, sf_dir: str) -> tuple[str, str]
     partitioning convention applied to the text index."""
     from cellbase_spark.operators.similarity import table_props
     from cellbase_spark.operators.text import build_bm25_index
-    from cellbase_spark.queries.scans import scratch_path, scratch_table
 
     docs = load_table(spark, sf_dir, "documents")
     out = []
@@ -989,7 +992,6 @@ def _ensure_bm25_compacted(spark: SparkSession, sf_dir: str) -> str:
     bucket leaf)."""
     from cellbase_spark.operators.similarity import table_props
     from cellbase_spark.operators.text import compact_bm25_index
-    from cellbase_spark.queries.scans import scratch_path, scratch_table
 
     t = scratch_table(sf_dir, "cb_bm25compact")
     ready = spark.catalog.tableExists(t) and "cellbase.n_docs" in table_props(
@@ -1056,7 +1058,6 @@ def _ensure_bm25_deleted(spark: SparkSession, sf_dir: str) -> str:
         build_bm25_index,
         delete_from_bm25_index,
     )
-    from cellbase_spark.queries.scans import scratch_path, scratch_table
 
     t = scratch_table(sf_dir, "cb_bm25del")
     props = (
@@ -1109,7 +1110,6 @@ def _ensure_bm25_delete_compacted(spark: SparkSession, sf_dir: str) -> str:
     so a mid-compaction crash leaves the table unready, not wrong)."""
     from cellbase_spark.operators.similarity import table_props
     from cellbase_spark.operators.text import compact_bm25_index
-    from cellbase_spark.queries.scans import scratch_path, scratch_table
 
     t = scratch_table(sf_dir, "cb_bm25delc")
     ready = spark.catalog.tableExists(t) and "cellbase.n_docs" in table_props(
@@ -1160,7 +1160,6 @@ def _ensure_bm25_lifecycle(spark: SparkSession, sf_dir: str) -> str:
         compact_bm25_index,
         delete_from_bm25_index,
     )
-    from cellbase_spark.queries.scans import scratch_path, scratch_table
 
     t = scratch_table(sf_dir, "cb_bm25lc")
     ready = spark.catalog.tableExists(t) and "cellbase.n_docs" in table_props(

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cellbase_spark.functions.exact import dsum, dsum_sql
-from cellbase_spark.io import load_table
+from cellbase_spark.io import load_table, scratch_path
 from cellbase_spark.operators.sampling import (
     hash_bucket,
     hash_bucket_duck_sql,
@@ -875,7 +875,6 @@ def q_pipeline_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from cellbase_spark.operators.publish import publish_artifact_dir
     from cellbase_spark.operators.text import lang_id, quality_score, tokens
-    from cellbase_spark.queries.scans import scratch_path
 
     d = load_table(spark, sf_dir, "documents")
     toks = tokens("text")

@@ -14,24 +14,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cellbase_spark import schemas
-from cellbase_spark.io import load_table, read_csv_table, write_csv_table
+from cellbase_spark.io import (
+    load_table,
+    read_csv_table,
+    scratch_path,
+    scratch_table,
+    write_bucketed,
+    write_csv_table,
+)
 from cellbase_spark.registry import register
-
-
-def scratch_path(sf_dir: str, *parts: str) -> str:
-    """Scratch sink path keyed by sf label + PID so concurrent runs or
-    interleaved scale factors never clobber each other's data mid-query
-    (fixed shared paths were an r4 advisory finding)."""
-    tag = f"{os.path.basename(os.path.normpath(sf_dir)) or 'sf'}_{os.getpid()}"
-    return os.path.join(tempfile.gettempdir(), f"cellbase_spark_{tag}", *parts)
-
-
-def scratch_table(sf_dir: str, name: str) -> str:
-    """Catalog-safe table name with the same sf+PID scoping."""
-    import re as _re
-
-    tag = f"{os.path.basename(os.path.normpath(sf_dir)) or 'sf'}_{os.getpid()}"
-    return f"{name}_{_re.sub(r'[^A-Za-z0-9_]', '_', tag)}"
 
 
 @register(
@@ -534,12 +525,13 @@ GROUP BY o.o_orderpriority
 )
 def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bucketed co-located join — the 100 TB shuffle-elimination story:
-    both fact tables are written `bucketBy(8, orderkey).sortBy(orderkey)`
-    so the sort-merge join reads bucket i of each side into the same
-    task, and the join plans with NO shuffle Exchange on either side
-    (pinned in tests/test_plans.py). At 100 TB this converts every
-    orders⋈lineitem from two table-wide shuffles into a scan-local
-    merge — the payoff of paying the shuffle once at layout time.
+    both fact tables are written in 8 orderkey buckets, sorted on
+    orderkey (`io.write_bucketed`), so the sort-merge join reads bucket
+    i of each side into the same task, and the join plans with NO
+    shuffle Exchange on either side (pinned in tests/test_plans.py). At
+    100 TB this converts every orders⋈lineitem from two table-wide
+    shuffles into a scan-local merge — the payoff of paying the shuffle
+    once at layout time.
 
     The tables are EXTERNAL (explicit path under the system temp dir),
     so the key never depends on the calling session's warehouse
@@ -552,26 +544,13 @@ def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
     t_orders = scratch_table(sf_dir, "cb_b_orders")
     t_lineitem = scratch_table(sf_dir, "cb_b_lineitem")
+    # one file per bucket, so the sorted-bucket scan order is trusted and
+    # the SMJ needs neither Exchange NOR Sort (see session._RUNTIME_CONF)
     for name, df, key in (
         (t_orders, o, "o_orderkey"),
         (t_lineitem, li, "l_orderkey"),
     ):
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        import shutil
-
-        shutil.rmtree(os.path.join(base, name), ignore_errors=True)
-        (
-            # one file per bucket (repartition on the bucket key first) so
-            # the sorted-bucket scan order is trusted and the SMJ needs
-            # neither Exchange NOR Sort (see session._RUNTIME_CONF)
-            df.repartition(8, F.col(key))
-            .write.mode("overwrite")
-            .bucketBy(8, key)
-            .sortBy(key)
-            .option("path", os.path.join(base, name))
-            .format("parquet")
-            .saveAsTable(name)
-        )
+        write_bucketed(df, name, os.path.join(base, name), key, 8)
     bo = spark.table(t_orders)
     bl = spark.table(t_lineitem)
     return (

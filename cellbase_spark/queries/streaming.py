@@ -24,14 +24,13 @@ Oracle notes:
 from __future__ import annotations
 
 import os
-import re
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cellbase_spark.functions.exact import dsum_sql
-from cellbase_spark.io import load_table
+from cellbase_spark.io import load_table, scratch_path
 from cellbase_spark.registry import register
 from cellbase_spark.streaming import pipelines
 
@@ -111,19 +110,17 @@ def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pipelines.session_agg(load_table(spark, sf_dir, "events"))
 
 
-def _events_stream_dir(sf_dir: str) -> str:
-    """A file stream source watches a DIRECTORY; the testdata table is a
-    single file. Stage a per-sf temp directory holding a symlink to
-    events.parquet — zero data copied, and the watched dir has exactly
-    the table's files."""
-    target = os.path.abspath(os.path.join(sf_dir, "events.parquet"))
-    d = os.path.join(
-        tempfile.gettempdir(), "cb_stream_src_" + re.sub(r"\W", "_", target)
-    )
+def _table_stream_dir(sf_dir: str, table: str) -> str:
+    """A file stream source watches a DIRECTORY; a testdata table is a
+    single file. Stage a scratch directory (`io.scratch_path`) holding a
+    symlink to <table>.parquet — zero data copied, and the watched dir
+    has exactly the table's files."""
+    # abspath target: a relative sf_dir would leave the link broken from
+    # any other cwd
+    target = os.path.abspath(os.path.join(sf_dir, f"{table}.parquet"))
+    d = scratch_path(sf_dir, "stream_src", table)
     os.makedirs(d, exist_ok=True)
-    link = os.path.join(d, "events.parquet")
-    # abspath target (a relative sf_dir would leave a link broken from any
-    # other cwd); heal a stale/broken link from a prior run
+    link = os.path.join(d, f"{table}.parquet")
     if os.path.lexists(link) and os.path.realpath(link) != target:
         os.remove(link)
     if not os.path.lexists(link):
@@ -153,7 +150,7 @@ def q_stream_run_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrival-order independent); tests/test_streaming.py additionally
     proves multi-batch incremental arrival (maxFilesPerTrigger=1) and
     watermark semantics the oracle can't see."""
-    events = pipelines.read_events_stream(spark, _events_stream_dir(sf_dir))
+    events = pipelines.read_events_stream(spark, _table_stream_dir(sf_dir, "events"))
     return pipelines.run_stream_to_memory(
         pipelines.tumbling_agg(events), "cb_stream_tumbling_sink"
     )
@@ -177,7 +174,7 @@ def q_stream_run_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     in width/slide = 4 windows; 4x the state rows of tumbling) run
     end-to-end by the streaming engine against the offset-expansion
     batch oracle."""
-    events = pipelines.read_events_stream(spark, _events_stream_dir(sf_dir))
+    events = pipelines.read_events_stream(spark, _table_stream_dir(sf_dir, "events"))
     return pipelines.run_stream_to_memory(
         pipelines.sliding_agg(events), "cb_stream_sliding_sink"
     )
@@ -214,7 +211,7 @@ def q_stream_run_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     the one state type that MERGES entries as late events bridge two
     sessions) run end-to-end by the streaming engine, hash-matched
     against the gaps-and-islands batch oracle."""
-    events = pipelines.read_events_stream(spark, _events_stream_dir(sf_dir))
+    events = pipelines.read_events_stream(spark, _table_stream_dir(sf_dir, "events"))
     return pipelines.run_stream_to_memory(
         pipelines.session_agg(events), "cb_stream_session_sink"
     )
@@ -235,7 +232,7 @@ def q_stream_run_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     state, and this bounded source needs no state eviction. (Watermarked
     dedup-with-eviction semantics are pinned separately in
     tests/test_streaming.py.)"""
-    events = pipelines.read_events_stream(spark, _events_stream_dir(sf_dir))
+    events = pipelines.read_events_stream(spark, _table_stream_dir(sf_dir, "events"))
     deduped = events.dropDuplicates(["user_id", "event_type"]).select(
         "user_id", "event_type"
     )
@@ -266,7 +263,7 @@ def q_stream_run_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     accumulation is per-user sequential within the single batch
     (pandas sum over the user's rows), matching DuckDB's per-group sum
     order after the 4dp round."""
-    events = pipelines.read_events_stream(spark, _events_stream_dir(sf_dir))
+    events = pipelines.read_events_stream(spark, _table_stream_dir(sf_dir, "events"))
     return pipelines.run_stream_to_memory(
         pipelines.running_user_totals(events),
         "cb_stream_stateful_sink",
@@ -298,7 +295,7 @@ def q_stream_run_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate, exactly what the oracle states."""
     from cellbase_spark.streaming import tws
 
-    events = pipelines.read_events_stream(spark, _events_stream_dir(sf_dir))
+    events = pipelines.read_events_stream(spark, _table_stream_dir(sf_dir, "events"))
     return pipelines.run_stream_to_memory(
         tws.running_user_totals_tws(events),
         "cb_stream_tws_sink",
@@ -511,7 +508,7 @@ def q_stream_run_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     side — file commit via the manifest (_spark_metadata), so readers
     see only committed batches. Oracle: the projected events table
     (append of a bounded source re-emits exactly the input)."""
-    src = _events_stream_dir(sf_dir)
+    src = _table_stream_dir(sf_dir, "events")
     out = tempfile.mkdtemp(prefix="cb_stream_sink_out_")
     ckpt = tempfile.mkdtemp(prefix="cb_stream_sink_ckpt_")
     events = pipelines.read_events_stream(spark, src)
@@ -547,7 +544,7 @@ def q_stream_run_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch: at 100 TB of stream the dim broadcast happens once per
     executor per batch, and no stream-side state is kept at all
     (stateless join — contrast q_stream_run_join_interval)."""
-    events = pipelines.read_events_stream(spark, _events_stream_dir(sf_dir))
+    events = pipelines.read_events_stream(spark, _table_stream_dir(sf_dir, "events"))
     c = load_table(spark, sf_dir, "customer")
     n = load_table(spark, sf_dir, "nation")
     dim = c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey).select(
@@ -588,7 +585,7 @@ def q_stream_run_join_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch interval self-join, which is exactly what the oracle checks.
     The event_id inequality both de-mirrors the pair and breaks the
     a==b self-match."""
-    src = _events_stream_dir(sf_dir)
+    src = _table_stream_dir(sf_dir, "events")
     a = pipelines.with_watermark(
         pipelines.read_events_stream(spark, src), "10 minutes"
     ).select(
@@ -732,8 +729,7 @@ def _two_batch_dir(spark: SparkSession, sf_dir: str) -> str:
     import glob as _glob
     import shutil
 
-    tag = re.sub(r"\W", "_", os.path.abspath(sf_dir)) + f"_{os.getpid()}"
-    out = os.path.join(tempfile.gettempdir(), f"cb_stream_twobatch_{tag}")
+    out = scratch_path(sf_dir, "stream_twobatch")
     if os.path.isdir(out) and _glob.glob(os.path.join(out, "*.parquet")):
         return out
     os.makedirs(out, exist_ok=True)
@@ -814,22 +810,6 @@ def q_stream_run_timer(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cb_stream_timer_sink",
         output_mode="append",
     )
-
-
-def _table_stream_dir(sf_dir: str, table: str) -> str:
-    """_events_stream_dir generalized to any single-file testdata table:
-    stage a per-sf temp directory holding a symlink to <table>.parquet."""
-    target = os.path.abspath(os.path.join(sf_dir, f"{table}.parquet"))
-    d = os.path.join(
-        tempfile.gettempdir(), "cb_stream_src_" + re.sub(r"\W", "_", target)
-    )
-    os.makedirs(d, exist_ok=True)
-    link = os.path.join(d, f"{table}.parquet")
-    if os.path.lexists(link) and os.path.realpath(link) != target:
-        os.remove(link)
-    if not os.path.lexists(link):
-        os.symlink(target, link)
-    return d
 
 
 def _incremental_dedup_oracle() -> str:
@@ -949,12 +929,11 @@ def q_stream_run_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFram
 
 def _stage_query_vectors(spark: SparkSession, sf_dir: str) -> str:
     """Stage the 32-query batch (vec_id < 32) as a single parquet file
-    for the replay source — PID+sf-scoped like every other scratch
-    artifact. Returns the part-file path."""
+    for the replay source, under the data dir's per-process
+    `io.scratch_path`. Returns the part-file path."""
     import glob as _glob
 
-    tag = re.sub(r"\W", "_", os.path.abspath(sf_dir)) + f"_{os.getpid()}"
-    out = os.path.join(tempfile.gettempdir(), f"cb_stream_annq_{tag}")
+    out = scratch_path(sf_dir, "stream_annq")
     hits = _glob.glob(os.path.join(out, "*.parquet"))
     if hits:
         return hits[0]
@@ -1016,6 +995,15 @@ def _run_ann_stream(
     # every run re-reads the parquet index; nothing persists across
     # runs. Above the gate (a real 100 TB index) the checkpoint is
     # skipped and each batch keeps the partition-pruned catalog scan.
+    #
+    # Static-index assumption: under the gate the index CONTENT is frozen
+    # for the whole run. Deletes stay visible (the per-batch tombstone
+    # anti-join below re-reads the table properties), but rows upserted
+    # or compacted into index_table mid-run (a build_id change) are not
+    # seen until the next run. No engine path mutates an index while a
+    # stream serves it; a serving loop that must see mid-run rebuilds
+    # would re-check build_id per batch and fall back to
+    # s.table(index_table) when it moved.
     from cellbase_spark.io import fits_checkpoint_gate
     from cellbase_spark.operators.ckpt import eager_checkpoint
 

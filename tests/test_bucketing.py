@@ -149,7 +149,7 @@ def test_compact_files_reduces_file_count_without_shuffle(spark, sf_dir):
     import os
 
     from cellbase_spark.plans.inspect import formatted_plan
-    from cellbase_spark.queries.scans import scratch_path
+    from cellbase_spark.io import scratch_path
     from cellbase_spark.registry import queries
 
     queries()["q_compact_files"](spark, sf_dir).collect()  # materialize
@@ -182,3 +182,38 @@ def test_ensure_bucketed_table_distinguishes_same_basename_dirs(spark, tmp_path)
     assert spark.table(tb).count() == 3
     for t in (ta, tb):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def test_fact_layout_distinguishes_same_basename_dirs(
+    spark, sf_dir_medium, tmp_path
+):
+    """The bucketed fact layout is keyed on the full data path: after a
+    build over a/sf0.01, q_tpch_q3_bucketed over b/sf0.01 (same basename,
+    lineitem without its odd orderkeys) must serve b's rows, not a's."""
+    import shutil
+    from pathlib import Path
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from cellbase_spark.registry import queries
+
+    dirs = {}
+    for sub in ("a", "b"):
+        d = tmp_path / sub / "sf0.01"
+        d.mkdir(parents=True)
+        for f in Path(sf_dir_medium).glob("*.parquet"):
+            shutil.copyfile(f, d / f.name)
+        dirs[sub] = str(d)
+    li_path = Path(dirs["b"]) / "lineitem.parquet"
+    li = pq.read_table(li_path)
+    pq.write_table(
+        li.filter(pc.equal(pc.bit_wise_and(li["l_orderkey"], 1), 0)), li_path
+    )
+
+    qs = queries()
+    want_a = _rows(qs["q_tpch_q3"](spark, dirs["a"]))
+    want_b = _rows(qs["q_tpch_q3"](spark, dirs["b"]))
+    assert want_a != want_b  # the two directories really hold different data
+    assert _rows(qs["q_tpch_q3_bucketed"](spark, dirs["a"])) == want_a
+    assert _rows(qs["q_tpch_q3_bucketed"](spark, dirs["b"])) == want_b

@@ -150,7 +150,7 @@ def test_partitioned_readback_prunes_partitions(spark, sf_dir):
     # it must resolve against directory names (PartitionFilters), leaving
     # nothing for PushedFilters, and never appear as a post-scan Filter.
     QS["q_partitioned_write"](spark, sf_dir)  # materialize the sink
-    from cellbase_spark.queries.scans import scratch_path
+    from cellbase_spark.io import scratch_path
 
     out = scratch_path(sf_dir, "part", "lineitem")
     from pyspark.sql import functions as F
@@ -412,7 +412,7 @@ def test_dpp_join_prunes_partitions_dynamically(spark, sf_dir):
     QS["q_dpp_join"](spark, sf_dir)  # materialize the partitioned sink
     from pyspark.sql import functions as F
 
-    from cellbase_spark.queries.scans import scratch_path
+    from cellbase_spark.io import scratch_path
 
     out = scratch_path(sf_dir, "part", "events")
     from cellbase_spark.io import load_table
@@ -435,7 +435,7 @@ def test_bucketed_join_key_has_no_join_exchange(spark, sf_dir):
     Exchange feeds the SortMergeJoin (only the final 5-group agg may
     exchange)."""
     QS["q_bucketed_join"](spark, sf_dir)  # author the bucketed tables
-    from cellbase_spark.queries.scans import scratch_table
+    from cellbase_spark.io import scratch_table
 
     bo = spark.table(scratch_table(sf_dir, "cb_b_orders"))
     bl = spark.table(scratch_table(sf_dir, "cb_b_lineitem"))
@@ -1000,7 +1000,7 @@ def test_ann_index_compact_layout_and_geometry(spark, sf_dir):
         _ensure_trained_ann_index,
     )
     from cellbase_spark.operators.publish import artifact_location
-    from cellbase_spark.queries.scans import scratch_path
+    from cellbase_spark.io import scratch_path
 
     t = _ensure_trained_ann_compact(spark, sf_dir)
     base_t = _ensure_trained_ann_index(spark, sf_dir)
@@ -1478,6 +1478,7 @@ def test_tpch_q3_bucketed_attach_zero_shuffle_foreign_plan(spark, sf_dir, monkey
     import cellbase_spark.operators.factlayout as fl
 
     monkeypatch.setattr(fl, "build_staged_fact_layout", _forbid)
+    monkeypatch.setattr(qj, "build_staged_fact_layout", _forbid)
     monkeypatch.setattr(qj, "_fact_bucketed_layout", _forbid)
 
     df = qj.q_tpch_q3_bucketed_attach(spark, sf_dir)

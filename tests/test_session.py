@@ -105,7 +105,6 @@ def test_sql_recursive_builds_lazily_without_touching_conf(spark, spark_jobs, sf
 _CONF_WRITERS = {
     "session.py": 1,  # configure_session, for foreign sessions
     "streaming/pipelines.py": 2,  # start_stream's locked state-store swap
-    "operators/factlayout.py": 4,  # child ingest processes only
     "streaming/tws.py": 2,
     "operators/similarity.py": 2,
 }
@@ -120,6 +119,18 @@ def test_no_new_session_conf_writers():
             found[path.relative_to(pkg).as_posix()] = n
     over = {f: n for f, n in found.items() if n > _CONF_WRITERS.get(f, 0)}
     assert not over, f"new session-conf writers: {over}"
+
+
+def test_bucketed_layouts_write_through_io():
+    """Every bucketed layout is written by io.write_bucketed, which checks
+    one file per bucket; no other module calls bucketBy."""
+    pkg = REPO / "cellbase_spark"
+    found = {}
+    for path in pkg.rglob("*.py"):
+        n = len(re.findall(r"bucketBy\(", path.read_text()))
+        if n:
+            found[path.relative_to(pkg).as_posix()] = n
+    assert found == {"io.py": 1}, f"bucketBy outside io.write_bucketed: {found}"
 
 
 def test_reused_worker_keeps_spark_zip_directory(spark):
